@@ -119,7 +119,7 @@ def run(n_events: int = 8_000_000, cpus: int = 32) -> dict:
             )
             t0 = time.time()
             append_delta(
-                spark, lake, batch, tiebreakers=TIEBREAKERS,
+                spark, lake, batch,
                 batch_id="b0", pre_dedup=False, **kw,
             )
             dt = time.time() - t0

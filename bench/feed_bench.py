@@ -60,7 +60,7 @@ def build_lake(spark, root, n_rows):
         (F.col("id") + 1).alias("_seq"),
         F.lit("upsert").alias("_op"),
     )
-    append_delta(spark, lake, base, tiebreakers=TIEBREAKERS,
+    append_delta(spark, lake, base,
                  batch_id="b0", pre_dedup=False)
     compact(spark, lake)
     return lake
@@ -70,7 +70,6 @@ def increment(spark, lake, n_rows, k, seq_base):
     """100k updates confined to buckets [0, k)."""
     from icdc_dataloader_spark.plans.lake import bucket_expr
     from icdc_dataloader_spark.plans.merge import append_delta
-    from icdc_dataloader_spark.repos import TIEBREAKERS
 
     upd = (
         spark.range(n_rows)
@@ -93,7 +92,7 @@ def increment(spark, lake, n_rows, k, seq_base):
             F.lit("upsert").alias("_op"),
         )
     )
-    append_delta(spark, lake, upd, tiebreakers=TIEBREAKERS,
+    append_delta(spark, lake, upd,
                  batch_id=f"u{k}_{seq_base}", pre_dedup=False)
 
 

@@ -83,7 +83,7 @@ def run(cpus: int = 32) -> dict:
                 )
                 t0 = time.time()
                 append_delta(
-                    spark, lake, batch, tiebreakers=TIEBREAKERS,
+                    spark, lake, batch,
                     batch_id="b0", pre_dedup=False, colocate=True, **kw,
                 )
                 results[n][name].append(round(time.time() - t0, 3))

@@ -40,12 +40,17 @@ from pyspark.sql.window import Window
 
 
 def lww_order_key(seq_col: str = "seq", *tiebreakers: str) -> Column:
-    """Total order for LWW: (seq, *tiebreakers) — SURVEY.md §7.4.
+    """Total order for LWW: (seq, *tiebreakers) — SURVEY.md §7.4.  The
+    engine's only definition of it: dedup, resolve, compaction, the change
+    feed and the COW merge all order by this key (the pandas feed fold
+    mirrors it).
 
     Ties on ``seq`` (duplicate replays / equal-seq events) are broken
     deterministically by the tiebreaker columns (engine default:
     (seq, commit, sha2(content,256))), so any arrival order and any
-    partitioning yield the same winner.
+    partitioning yield the same winner.  The struct keeps each column's
+    own type and Spark's struct ordering: fields compare left to right by
+    type (a LongType 10 beats 9), and NULL sorts lowest, below ``''``.
     """
     return F.struct(F.col(seq_col), *[F.col(c) for c in tiebreakers])
 
@@ -157,9 +162,8 @@ def lww_dedup(
             .agg(
                 F.max_by(
                     F.col("_w"),
-                    F.struct(
-                        F.col(f"_w.{seq_col}"),
-                        *[F.col(f"_w.{c}") for c in tiebreakers],
+                    lww_order_key(
+                        f"_w.{seq_col}", *[f"_w.{c}" for c in tiebreakers]
                     ),
                 ).alias("_w")
             )
@@ -167,9 +171,7 @@ def lww_dedup(
         )
 
     if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(seq_col).desc(), *[F.col(c).desc() for c in tiebreakers]
-        )
+        w = Window.partitionBy(*keys).orderBy(order.desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

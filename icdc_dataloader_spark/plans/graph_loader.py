@@ -249,9 +249,7 @@ class GraphLoader:
                 f"seq {persisted} ({lake.root}) — loader state is stale; "
                 "refusing to apply rows that would lose last-writer-wins"
             )
-        res = merge_into(
-            self.spark, lake, staged, batch_id=batch_id, tiebreakers=["_sig"]
-        )
+        res = merge_into(self.spark, lake, staged, batch_id=batch_id)
         if res["noop"]:
             raise RuntimeError(
                 f"batch id {batch_id!r} was already committed — loader seq "
@@ -740,8 +738,7 @@ class GraphLoader:
             )
             if not victims.isEmpty():
                 merge_into(
-                    self.spark, lake, victims, batch_id=f"del-{nt}-{seq}",
-                    tiebreakers=["_sig"],
+                    self.spark, lake, victims, batch_id=f"del-{nt}-{seq}"
                 )
 
         # drop edges touching doomed nodes
@@ -763,7 +760,7 @@ class GraphLoader:
             )
             merge_into(
                 self.spark, self.edge_lake(), staged,
-                batch_id=f"del-edges-{seq}", tiebreakers=["_sig"],
+                batch_id=f"del-edges-{seq}",
             )
         doomed.unpersist()
         return n_nodes, n_rels

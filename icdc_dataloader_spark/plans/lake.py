@@ -37,6 +37,7 @@ buckets present in a batch and joins co-locate by bucket.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import shutil
@@ -48,6 +49,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .batchids import BatchIdSet
+
+log = logging.getLogger(__name__)
 
 _LOG_RE = re.compile(r"^v(\d{12})\.json$")
 
@@ -437,7 +440,12 @@ class LakeTable:
                             "max": _json_safe(max(maxs)),
                         }
             except Exception:
-                pass
+                # the file is still committed; without stats it is never
+                # pruned and contributes no lineage
+                log.warning(
+                    "footer stats unreadable for %s; committing it without "
+                    "stats", full, exc_info=True,
+                )
             return {
                 "path": os.path.relpath(full, self.root),
                 "rows": md.num_rows,

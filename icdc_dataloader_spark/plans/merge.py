@@ -1,7 +1,7 @@
 """MERGE INTO planner: set-oriented upsert/new/delete over a LakeTable.
 
 Replaces the reference's per-row Cypher writes (one bolt round-trip per row,
-data_loader.py:901-947) with one copy-on-write MERGE per micro-batch:
+data_loader.py:901-947) with one MERGE per micro-batch:
 
 - ``UPSERT_MODE`` (MERGE ... ON CREATE SET / ON MATCH SET,
   data_loader.py:804-824)  -> op='upsert': LWW winner per key wins.
@@ -13,18 +13,30 @@ data_loader.py:901-947) with one copy-on-write MERGE per micro-batch:
   is stored so late (lower-seq) upserts arriving in later batches still
   lose to the delete — global LWW independent of batch assignment.
 
-Physical plan, designed for 10^10 events:
+One order, one kernel.  The LWW total order is
+:func:`operators.dedup.lww_order_key` over ``(_seq, *tiebreakers)`` with
+the table's own tiebreakers (:meth:`LakeTable.tiebreakers`).  Every Spark
+path that picks a per-key winner — the merge-on-read :func:`resolve`
+(``read_state`` and both sides of :func:`changes_between`),
+:func:`compact` and the copy-on-write :func:`merge_into` — runs the same
+kernel, :func:`_lww_groups`:
 
-1. bucket the batch by key hash; collect the touched bucket ids (<= the
-   table's n_buckets, driver-side integers only);
-2. scan ONLY the touched buckets' data files (file pruning via the snapshot
-   manifest — the Spark analogue of the reference's id indexes,
-   create_index.py:60-95);
-3. union current ∪ batch and take the per-key max_by((seq, tiebreakers))
-   winner — partial aggregation map-side handles hot-key skew (the explicit
-   two-phase salted variant is operators/dedup.py);
-4. rewrite touched buckets, carry every untouched file forward in the new
-   snapshot, commit atomically keyed by batch_id (idempotent re-apply).
+1. ``repartition(n_buckets, _bucket)`` — the only payload exchange;
+2. the key's tombstone watermark ``_del_max``: a window max over
+   ``(_bucket, keys)``.  ``HashPartitioning(_bucket)`` already satisfies
+   the window's distribution because ``_bucket`` is a function of the
+   bucket columns, so no second exchange; window partitioning groups NULL
+   key components together;
+3. ``max_by(payload, order)`` grouped on ``(_bucket, keys)``, reusing the
+   partitioning and the window's sort.  Created lineage resets across a
+   delete->recreate: only rows after the key's latest tombstone count.
+
+The output lands one bucket per partition, ready for the bucket-partitioned
+write.  COW scans only the batch's touched buckets (file pruning via the
+snapshot manifest — the Spark analogue of the reference's id indexes,
+create_index.py:60-95), rewrites them from the kernel over touched base ∪
+batch, carries every other file forward and commits atomically keyed by
+batch_id (idempotent re-apply).
 
 The timestamps the reference sets in ON CREATE/ON MATCH (datetime(),
 data_loader.py:822-823) are deliberately replaced by ``_seq`` lineage
@@ -33,10 +45,12 @@ columns (_created_seq/_updated_seq) so replays are bit-deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
+from ..operators.dedup import lww_dedup, lww_order_key
 from .lake import LakeTable, bucket_expr, _align
 
 INTERNAL_COLS = ["_seq", "_op", "_bucket", "_created_seq", "_updated_seq"]
@@ -58,10 +72,42 @@ def table_schema(payload: T.StructType) -> T.StructType:
     return T.StructType(fields)
 
 
-def _lww_order(seq_col: str, tiebreakers: list[str]) -> F.Column:
-    return F.struct(
-        F.col(seq_col),
-        *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in tiebreakers],
+def _lww_groups(df: DataFrame, lake: LakeTable, *extra: F.Column) -> DataFrame:
+    """The resolve kernel (module docstring): one row per ``(_bucket,
+    keys)`` with the LWW winner as struct ``_w`` (every column of ``df``),
+    ``_first_seq`` (the created lineage after the key's latest tombstone)
+    and the ``extra`` aggregates."""
+    key_cols = lake.key_cols()
+    main = df.repartition(lake.n_buckets(), "_bucket").withColumn(
+        "_del_max",
+        F.max(F.when(F.col("_op") == OP_DELETE, F.col("_seq"))).over(
+            Window.partitionBy("_bucket", *key_cols)
+        ),
+    )
+    alive_after_delete = (F.col("_op") != OP_DELETE) & (
+        F.col("_del_max").isNull() | (F.col("_seq") > F.col("_del_max"))
+    )
+    return main.groupBy("_bucket", *key_cols).agg(
+        F.max_by(
+            F.struct(*df.columns), lww_order_key("_seq", *lake.tiebreakers())
+        ).alias("_w"),
+        F.min(F.when(alive_after_delete, F.col("_created_seq"))).alias(
+            "_first_seq"
+        ),
+        *extra,
+    )
+
+
+def _winner_rows(groups: DataFrame, *keep: str) -> DataFrame:
+    """Flatten :func:`_lww_groups` output to the winning rows, with
+    ``_created_seq`` taken from the lineage aggregate when it has one."""
+    return (
+        groups.select("_w.*", "_first_seq", *keep)
+        .withColumn(
+            "_created_seq",
+            F.coalesce(F.col("_first_seq"), F.col("_created_seq")),
+        )
+        .drop("_first_seq")
     )
 
 
@@ -71,41 +117,24 @@ def resolve(
     version: int | None = None,
     buckets: list[int] | None = None,
     project: list[str] | None = None,
-    bucket_partition: bool = False,
 ) -> DataFrame:
     """Current table rows with merge-on-read deltas resolved.
 
-    COW snapshots (no delta files) are returned as-is — zero overhead.
-    With deltas, one per-key LWW aggregation over base ∪ deltas (same total
-    order as the write path; tiebreakers from table metadata).
-
-    Plan shape (scale-critical — this runs over the whole table at compact
-    and over touched buckets at every MoR read).  The delete→recreate
-    lineage reset needs the per-key tombstone watermark.  A window over the
-    full payload forces a SORT of EVERY row in one reduce-side pass whose
-    chunk size grows with (rows / shuffle partitions) — at low parallelism
-    that spilled to disk (measured: 119s of a 177s local[2] compact).
-    Instead the watermark comes from a column-pruned tombstone-only
-    aggregate (reads 3 columns of delete rows only) joined back — AQE
-    broadcasts it when small — and the winner comes from a partial-agg
-    max_by whose map-side sort is bounded by the input SPLIT size
-    (~128MB), independent of parallelism, and which collapses duplicate
-    keys before any data moves.  Measured at local[8]: 15.7s vs 19.3s
-    (window) for an 8M-row compact; the local[2] spill is gone entirely.
+    Delta-free reads (COW snapshots, freshly compacted buckets) return the
+    scan as-is.  With deltas, the rows go through the resolve kernel
+    (:func:`_lww_groups`), so the output is partitioned one bucket per
+    partition.  ``project`` narrows the scan to these columns plus what
+    the kernel needs (keys, ``_bucket``, lineage, tiebreakers) so Catalyst
+    prunes the parquet read.
     """
     df = lake.read(spark, version=version, buckets=buckets)
-    key_cols = lake.key_cols()
     if project is not None:
-        # caller only needs these columns (e.g. changes_between's OLD side
-        # wants keys + _seq): narrow the struct so Catalyst prunes the
-        # parquet scan instead of shipping every payload byte through the
-        # winner aggregation
         needed = [
             c
             for c in dict.fromkeys(
                 list(project)
-                + key_cols
-                + ["_seq", "_op", "_created_seq"]
+                + lake.key_cols()
+                + ["_seq", "_op", "_bucket", "_created_seq"]
                 + lake.tiebreakers()
             )
             if c in df.columns
@@ -115,92 +144,12 @@ def resolve(
     if buckets is not None:
         # bucket-targeted compaction makes mixed states the norm: a
         # bucket-restricted read over delta-free buckets must not pay the
-        # tombstone-watermark join + LWW aggregation just because SOME
-        # OTHER bucket still holds deltas (advice round 4)
+        # kernel just because SOME OTHER bucket still holds deltas
         bset = set(buckets)
         deltas = [f for f in deltas if f["bucket"] in bset]
     if not deltas:
-        if bucket_partition:
-            return df.repartition(lake.n_buckets(), "_bucket")
         return df
-
-    order = _lww_order("_seq", lake.tiebreakers())
-    payload = F.struct(*df.columns)
-    # created lineage must RESET across a delete->recreate: only rows at or
-    # after the key's latest tombstone count toward _first_seq (the COW path
-    # gets this for free because the tombstone physically replaces the old
-    # row; computing min over ALL non-delete rows here resurrected the
-    # pre-delete lineage).
-    if bucket_partition:
-        # Compaction path (round 6).  The old shape paid for the tombstone
-        # watermark with a per-key aggregate JOINED back — planned as a
-        # sort-merge join whose ENSURE_REQUIREMENTS exchange shuffled the
-        # full payload by null-safe key, followed by the winner
-        # aggregation's exchange and compact()'s repartition(_bucket):
-        # three payload exchanges and repeated full sorts.  Here the
-        # payload moves ONCE: repartition by _bucket, then the watermark
-        # is a window over (_bucket, keys) — HashPartitioning(_bucket)
-        # satisfies the window's clustered distribution because _bucket is
-        # a pure function of the bucket columns, so no further exchange —
-        # and the winner SortAggregate groups on (_bucket, keys), reusing
-        # both the partitioning and the window's (bucket, keys) sort
-        # order.  Window partitioning groups NULL key components together
-        # exactly like the old eqNullSafe join did.  Output lands already
-        # clustered one bucket per partition for the write (guide §2.4:
-        # 3 Exchange -> 1; see OPTIMIZATION_r06.md for the measured A/B).
-        from pyspark.sql.window import Window
-
-        main = df.repartition(lake.n_buckets(), "_bucket")
-        wspec = Window.partitionBy("_bucket", *key_cols)
-        main = main.withColumn(
-            "_del_max",
-            F.max(
-                F.when(F.col("_op") == OP_DELETE, F.col("_seq"))
-            ).over(wspec),
-        )
-        group_cols = ["_bucket"] + key_cols
-    else:
-        # read-path shape (unchanged): column-pruned tombstone aggregate
-        # joined back — AQE broadcasts it when small, and the winner
-        # aggregation's map-side partial phase bounds per-task sort state
-        # by the input split size (see the round-5 measurements above)
-        dels = (
-            df.filter(F.col("_op") == OP_DELETE)
-            .groupBy(*key_cols)
-            .agg(F.max("_seq").alias("_del_max"))
-            .select(
-                *[F.col(k).alias(f"_dk_{k}") for k in key_cols], "_del_max"
-            )
-        )
-        # groupBy buckets NULL key components together, so the watermark
-        # join must too: null-unsafe equality would detach a NULL-keyed
-        # tombstone from its rows and silently skip their delete->recreate
-        # lineage reset
-        cond = None
-        for k in key_cols:
-            c = F.col(k).eqNullSafe(F.col(f"_dk_{k}"))
-            cond = c if cond is None else (cond & c)
-        main = df.join(dels, cond, "left").drop(
-            *[f"_dk_{k}" for k in key_cols]
-        )
-        group_cols = list(key_cols)
-    alive_after_delete = (F.col("_op") != OP_DELETE) & (
-        F.col("_del_max").isNull() | (F.col("_seq") > F.col("_del_max"))
-    )
-    return (
-        main.groupBy(*group_cols)
-        .agg(
-            F.max_by(payload, order).alias("_w"),
-            F.min(
-                F.when(alive_after_delete, F.col("_created_seq"))
-            ).alias("_first_seq"),
-        )
-        .select("_w.*", "_first_seq")
-        .withColumn(
-            "_created_seq", F.coalesce(F.col("_first_seq"), F.col("_created_seq"))
-        )
-        .drop("_first_seq")
-    )
+    return _winner_rows(_lww_groups(df, lake))
 
 
 def changed_buckets(
@@ -276,8 +225,8 @@ def changes_between(
         .filter(F.col("_op") != OP_DELETE)
         .select(*key_cols, F.col("_seq").alias("_new_seq"), *payload_cols)
     )
-    # NULL-keyed rows are first-class in this lake (resolve joins tombstone
-    # watermarks with eqNullSafe above): the old/new states must be matched
+    # NULL-keyed rows are first-class in this lake (the kernel groups NULL
+    # key components together): the old/new states must be matched
     # null-safely too, else a live NULL-keyed key present in both snapshots
     # fails to match itself and double-reports as insert+delete
     old = old.select(
@@ -315,23 +264,41 @@ def read_state(spark: SparkSession, lake: LakeTable, version: int | None = None)
     return df.filter(F.col("_op") != OP_DELETE).drop(*[c for c in INTERNAL_COLS if c in df.columns])
 
 
+def _bucket_lineage(batch: DataFrame) -> dict:
+    """Per touched bucket: min/max ``_seq`` and row count of the batch
+    (one small aggregate job; its keys are the touched buckets)."""
+    return {
+        str(r["_bucket"]): {
+            "min_seq": r["min_seq"], "max_seq": r["max_seq"], "rows": r["rows"]
+        }
+        for r in batch.groupBy("_bucket")
+        .agg(
+            F.min("_seq").alias("min_seq"),
+            F.max("_seq").alias("max_seq"),
+            F.count(F.lit(1)).alias("rows"),
+        )
+        .collect()
+    }
+
+
 def merge_into(
     spark: SparkSession,
     lake: LakeTable,
     batch_df: DataFrame,
-    seq_col: str = "_seq",
-    op_col: str = "_op",
-    tiebreakers: list[str] | None = None,
     batch_id=None,
     error_sink=None,
-    touched: list[int] | None = None,
 ) -> dict:
-    """Apply one CDC batch. Returns {'version', 'metrics', 'noop', 'errors'}.
+    """Apply one CDC batch copy-on-write.  Returns {'version', 'metrics',
+    'noop', 'errors', 'lineage'}.
 
     ``batch_df`` carries payload columns (a subset of the table payload is
     fine — schema-evolution alignment fills NULLs), ``_seq`` and ``_op``.
-    ``touched``: the batch's hash buckets if the caller already knows them
-    (skips one aggregation job).
+    Two Spark actions on the common path (four jobs under AQE, which runs
+    each shuffle as its own job): the per-bucket lineage aggregate, which
+    names the touched buckets, and the rewrite of those buckets, whose
+    :class:`Observation` yields the row counts.  Conflicting
+    ``new`` rows are recomputed and passed to ``error_sink`` only when the
+    write observed some.
     """
     if batch_id is not None and lake.is_batch_committed(batch_id):
         return {
@@ -342,143 +309,101 @@ def merge_into(
         }
 
     key_cols = lake.key_cols()
-    n_buckets = lake.n_buckets()
     schema = lake.schema()
-    tiebreakers = tiebreakers or []
-
-    batch = batch_df.withColumn("_bucket", bucket_expr(lake.bucket_cols(), n_buckets))
-    batch = batch.withColumn("_created_seq", F.col(seq_col)).withColumn(
-        "_updated_seq", F.col(seq_col)
+    batch = batch_df.withColumn(
+        "_bucket", bucket_expr(lake.bucket_cols(), lake.n_buckets())
     )
-    # materialize the staged batch once: the bucket collect, the NEW-conflict
-    # join and the LWW union all reuse it instead of recomputing its lineage
-    batch = _align(batch, schema).persist()
-
-    if touched is None:
-        touched = sorted(
-            r["_bucket"] for r in batch.select("_bucket").distinct().collect()
-        )
+    batch = batch.withColumn("_created_seq", F.col("_seq")).withColumn(
+        "_updated_seq", F.col("_seq")
+    )
+    # not persisted: under AQE a cached input costs its own job, more than
+    # re-running the staging projection in the rewrite
+    batch = _align(batch, schema)
+    lineage = _bucket_lineage(batch)
+    touched = sorted(int(b) for b in lineage)
     snap = lake.snapshot()
     if not touched:
-        batch.unpersist()
         version = lake.commit(
             [], snap["files"], operation="merge-empty", batch_id=batch_id, metrics={}
         )
-        return {"version": version, "metrics": {}, "noop": False, "errors": None}
+        return {"version": version, "metrics": {}, "noop": False,
+                "errors": None, "lineage": {}}
 
-    current = lake.read(spark, buckets=touched)
-
-    # --- single-aggregation LWW merge ----------------------------------------
-    # ONE shuffle of the payload per batch: current ∪ batch grouped by key,
-    # with the global winner, the batch-side winner (for NEW-conflict
-    # detection), the (unique) current row, liveness and created-lineage all
-    # computed in the same hash aggregate.  Map-side partial aggregation is
-    # the first phase of the two-phase (salted) merge — a hot key collapses
-    # to one candidate per map task before any data moves.
-    cur_tagged = current.withColumn("_src", F.lit("cur"))
-    bat_tagged = batch.withColumn("_src", F.lit("batch"))
-    unioned = cur_tagged.unionByName(bat_tagged)
-
-    payload_cols = [f.name for f in schema.fields] + ["_src"]
-    payload = F.struct(*payload_cols)
-    order = F.struct(
-        F.col(seq_col),
-        *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in tiebreakers],
+    unioned = (
+        lake.read(spark, buckets=touched)
+        .withColumn("_src", F.lit("cur"))
+        .unionByName(batch.withColumn("_src", F.lit("batch")))
     )
+    payload = F.struct(*unioned.columns)
+    order = lww_order_key("_seq", *lake.tiebreakers())
     is_batch = F.col("_src") == "batch"
     is_cur = F.col("_src") == "cur"
-    agg = unioned.groupBy(*key_cols).agg(
-        F.max_by(payload, order).alias("_w"),
+    groups = _lww_groups(
+        unioned,
+        lake,
+        # the batch-side and current winners, for NEW_MODE conflicts
         F.max_by(F.when(is_batch, payload), F.when(is_batch, order)).alias("_bw"),
-        # <=1 current row per key; max_by because max() cannot order structs
-        # that contain map columns (edge tables carry rel_props maps)
-        F.max_by(F.when(is_cur, payload), F.when(is_cur, F.lit(1))).alias("_cw"),
+        F.max_by(F.when(is_cur, payload), F.when(is_cur, order)).alias("_cw"),
         F.max(
-            F.when(is_cur & (F.col(op_col) != OP_DELETE), 1).otherwise(0)
+            F.when(is_cur & (F.col("_op") != OP_DELETE), 1).otherwise(0)
         ).alias("_had_live"),
-        F.min(F.when(F.col(op_col) != OP_DELETE, F.col("_created_seq"))).alias(
-            "_first_seq"
-        ),
     )
     # NEW_MODE (W2, data_loader.py:912-918): if the batch's winning event is
     # a 'new' on a live key, the whole batch contribution for that key is
-    # rejected — the current row stands, and an error row is emitted.
-    conflict = (
-        F.col("_bw").isNotNull()
-        & (F.col("_bw")[op_col] == OP_NEW)
-        & (F.col("_had_live") == 1)
+    # rejected — the current row stands as stored, and an error row is
+    # emitted.
+    conflict = F.coalesce(
+        (F.col("_bw._op") == OP_NEW) & (F.col("_had_live") == 1), F.lit(False)
     )
-    winners = agg.select(
-        *key_cols,
-        F.when(conflict, F.col("_cw")).otherwise(F.col("_w")).alias("_w"),
-        conflict.alias("_conflict"),
-        F.col("_bw").isNotNull().alias("_has_batch"),
-        "_had_live",
-        "_first_seq",
-    ).select(
-        "_w.*", "_conflict", "_has_batch", "_had_live", "_first_seq"
+    resolved = _winner_rows(
+        groups.select(
+            F.when(conflict, F.col("_cw")).otherwise(F.col("_w")).alias("_w"),
+            F.when(~conflict, F.col("_first_seq")).alias("_first_seq"),
+            conflict.alias("_conflict"),
+            "_had_live",
+        ),
+        "_conflict", "_had_live",
     )
-    # preserve created lineage across updates (ON CREATE SET created, W1)
-    winners = winners.withColumn(
-        "_created_seq", F.coalesce(F.col("_first_seq"), F.col("_created_seq"))
-    )
-    winners = winners.persist()
 
-    errors = winners.filter(F.col("_conflict")).select(
-        *key_cols,
-        F.lit("node_exists_in_new_mode").alias("reason"),
-        F.lit("error").alias("severity"),
-    )
-    if error_sink is not None:
-        error_sink(errors)
+    def rows(cond):
+        return F.count(F.when(cond, 1))
 
-    m = winners.agg(
-        F.sum(
-            F.when(
-                (F.col("_src") == "batch")
-                & (F.col(op_col) != OP_DELETE)
-                & (F.col("_had_live") == 0),
-                1,
-            ).otherwise(0)
-        ).alias("rows_inserted"),
-        F.sum(
-            F.when(
-                (F.col("_src") == "batch")
-                & (F.col(op_col) != OP_DELETE)
-                & (F.col("_had_live") == 1),
-                1,
-            ).otherwise(0)
-        ).alias("rows_updated"),
-        F.sum(
-            F.when(
-                (F.col("_src") == "batch")
-                & (F.col(op_col) == OP_DELETE)
-                & (F.col("_had_live") == 1),
-                1,
-            ).otherwise(0)
-        ).alias("rows_deleted"),
-        F.sum(F.when(F.col("_src") == "cur", 1).otherwise(0)).alias("rows_unchanged"),
-    ).collect()[0]
-    metrics = {k: int(m[k] or 0) for k in m.asDict()}
-
+    won = F.col("_src") == "batch"
+    live = F.col("_op") != OP_DELETE
+    had = F.col("_had_live") == 1
+    obs = Observation()
     out = _align(
-        winners.drop("_src", "_had_live", "_first_seq", "_conflict", "_has_batch"),
+        resolved.observe(
+            obs,
+            rows(won & live & ~had).alias("rows_inserted"),
+            rows(won & live & had).alias("rows_updated"),
+            rows(won & ~live & had).alias("rows_deleted"),
+            rows(~won).alias("rows_unchanged"),
+            rows(F.col("_conflict")).alias("new_mode_conflicts"),
+        ).drop("_src", "_conflict", "_had_live"),
         schema,
     )
-    # co-locate by bucket for the write; AQE coalesces small outputs
-    out = out.repartition(max(len(touched), 1), "_bucket")
-
     new_version = lake.latest_version() + 1
     new_files = lake.write_data_files(out, new_version, schema)
-    winners.unpersist()
-    batch.unpersist()
+    metrics = {k: int(v or 0) for k, v in obs.get.items()}
+
+    errors = None
+    if metrics["new_mode_conflicts"]:
+        errors = resolved.filter(F.col("_conflict")).select(
+            *key_cols,
+            F.lit("node_exists_in_new_mode").alias("reason"),
+            F.lit("error").alias("severity"),
+        )
+        if error_sink is not None:
+            error_sink(errors)
 
     touched_set = set(touched)
     carried = [f for f in snap["files"] if f["bucket"] not in touched_set]
     version = lake.commit(
         new_files, carried, operation="merge", batch_id=batch_id, metrics=metrics
     )
-    return {"version": version, "metrics": metrics, "noop": False, "errors": errors}
+    return {"version": version, "metrics": metrics, "noop": False,
+            "errors": errors, "lineage": lineage}
 
 
 # ---------------------------------------------------------------------------
@@ -566,14 +491,9 @@ def append_delta(
     spark: SparkSession,
     lake: LakeTable,
     batch_df: DataFrame,
-    seq_col: str = "_seq",
-    op_col: str = "_op",
-    tiebreakers: list[str] | None = None,
     batch_id=None,
     error_sink=None,
     pre_dedup: bool = True,
-    touched: list[int] | None = None,
-    has_new: bool | None = None,
     colocate: bool = True,
     colocate_salt: int = 1,
     salt_buckets: dict[int, int] | list[int] | None = None,
@@ -582,8 +502,8 @@ def append_delta(
 
     This is the 10^10-scale ingest path: per-batch work is proportional to
     the BATCH, not the table.  The per-key winner is materialized lazily by
-    :func:`resolve` / :func:`compact` using the same (seq, tiebreakers)
-    total order, so the final state is identical to the COW path (tested).
+    :func:`resolve` / :func:`compact` with the same kernel and order as
+    the COW path, so the final state is identical (tested).
 
     - ``pre_dedup``: explicit key-salted two-phase LWW inside the batch
       before writing (bounds delta size by the batch's key count — the hot
@@ -597,38 +517,30 @@ def append_delta(
         return {"version": lake.latest_version(), "metrics": {}, "noop": True,
                 "errors": None}
 
-    from ..operators.dedup import lww_dedup
-
     key_cols = lake.key_cols()
     n_buckets = lake.n_buckets()
     schema = lake.schema()
-    tiebreakers = tiebreakers or lake.tiebreakers()
+    tiebreakers = lake.tiebreakers()
 
     batch = batch_df.withColumn("_bucket", bucket_expr(lake.bucket_cols(), n_buckets))
-    batch = batch.withColumn("_created_seq", F.col(seq_col)).withColumn(
-        "_updated_seq", F.col(seq_col)
+    batch = batch.withColumn("_created_seq", F.col("_seq")).withColumn(
+        "_updated_seq", F.col("_seq")
     )
     batch = _align(batch, schema)
     if pre_dedup:
         batch = lww_dedup(
-            batch, key_cols, seq_col=seq_col, tiebreakers=tiebreakers,
+            batch, key_cols, seq_col="_seq", tiebreakers=tiebreakers,
             strategy="salted",
         )
 
     # ONE Spark job on the common path: the write itself.  NEW-op presence
     # is observed during that job; per-bucket lineage comes from the
     # written files' parquet footers (no extra aggregation jobs).
-    from pyspark.sql import Observation
-
-    obs = None
-    if has_new is None:
-        obs = Observation()
-        batch = batch.observe(
-            obs,
-            F.max(
-                F.when(F.col(op_col) == OP_NEW, 1).otherwise(0)
-            ).alias("has_new"),
-        )
+    obs = Observation()
+    batch = batch.observe(
+        obs,
+        F.max(F.when(F.col("_op") == OP_NEW, 1).otherwise(0)).alias("has_new"),
+    )
 
     # ``colocate``: shuffle the batch so each bucket is one file (read- and
     # footer-friendly) vs write straight from the input splits (zero
@@ -672,7 +584,7 @@ def append_delta(
                             F.lit(v).cast("long") for v in
                             _distinct_partition_salts(b, k, n_part, taken)
                         ]),
-                        (F.pmod(F.xxhash64(F.col(seq_col)), F.lit(k))
+                        (F.pmod(F.xxhash64(F.col("_seq")), F.lit(k))
                          + 1).cast("int"),
                     )
                     w = F.col("_bucket") == b
@@ -691,7 +603,7 @@ def append_delta(
                 # the exact, recommended one.
                 n_part = n_buckets
                 salt = F.pmod(
-                    F.xxhash64(F.col(seq_col)), F.lit(colocate_salt)
+                    F.xxhash64(F.col("_seq")), F.lit(colocate_salt)
                 ).cast("long")
             out = batch.repartition(
                 n_part, F.col("_bucket").cast("long"), salt
@@ -702,23 +614,19 @@ def append_delta(
         out = batch
     new_version = lake.latest_version() + 1
     new_files = lake.write_data_files(out, new_version, schema, role="delta")
-    if obs is not None:
-        has_new = bool(obs.get.get("has_new") or 0)
 
     n_conflicts = 0
-    if has_new:
+    if obs.get.get("has_new"):
         # rare path: resolve NEW conflicts against current state, re-stage
         # the delta without the conflicting keys (extra jobs only here)
         staged = spark.read.schema(schema).parquet(
             *[f"{lake.root}/{f['path']}" for f in new_files]
         ) if new_files else spark.createDataFrame([], schema)
-        if touched is None:
-            touched = sorted({f["bucket"] for f in new_files})
+        touched = sorted({f["bucket"] for f in new_files})
         current = resolve(spark, lake, buckets=touched)
-        live = current.filter(F.col(op_col) != OP_DELETE).select(*key_cols)
-        order = _lww_order(seq_col, tiebreakers)
+        live = current.filter(F.col("_op") != OP_DELETE).select(*key_cols)
         batch_winner_op = staged.groupBy(*key_cols).agg(
-            F.max_by(F.col(op_col), order).alias("_wop")
+            F.max_by(F.col("_op"), lww_order_key("_seq", *tiebreakers)).alias("_wop")
         )
         conflicts = (
             batch_winner_op.filter(F.col("_wop") == OP_NEW)
@@ -817,11 +725,11 @@ def compact(
         )
         if not buckets:
             return lake.latest_version()  # nothing ripe: no-op
-    # bucket_partition=True: resolve hash-partitions its INPUT by _bucket
-    # and groups on (_bucket, keys), so the output is already laid out one
-    # bucket per partition — no second payload shuffle before the write
-    # (plan: 2 Exchange -> 1; see OPTIMIZATION_r06.md)
-    winners = resolve(spark, lake, buckets=buckets, bucket_partition=True)
+    # always the kernel, deltas or not: its output is already laid out one
+    # bucket per partition, so the write needs no second payload shuffle
+    winners = _winner_rows(
+        _lww_groups(lake.read(spark, buckets=buckets), lake)
+    )
     if drop_tombstones_below_seq is not None:
         winners = winners.filter(
             (F.col("_op") != OP_DELETE)

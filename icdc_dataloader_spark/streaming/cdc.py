@@ -17,9 +17,10 @@ Per micro-batch here:
 2. **parity column**: ``content_sha256 = sha2(content, 256)`` — the
    per-row invariant the replay is judged on (BASELINE input_hint; the
    reference's analogue is file md5/sha512 hashing, file_loader.py:98-113).
-3. **LWW dedup** on (seq, commit, content_sha256): the COW merge
-   aggregation and the MoR read-time resolve both ARE the two-phase
-   (map-side partial) LWW; the explicit key-salted in-batch pass
+3. **LWW** on the table's order (seq, commit, content_sha256 for the
+   repos table — ``LakeTable.tiebreakers``): the COW merge, the MoR
+   read-time resolve and compaction all run the one resolve kernel of
+   plans/merge.py; the explicit key-salted in-batch pass
    (operators/dedup.py) is available via ``pre_dedup=True`` for
    duplicate-heavy bursts.
 4. **MERGE INTO** the lake table (plans/merge.py) — idempotent per
@@ -31,6 +32,7 @@ Per micro-batch here:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +44,8 @@ from ..operators.validate import validation_check_pairs, validation_error_checks
 from ..plans.lake import LakeTable, bucket_expr
 from ..plans.merge import OP_DELETE, append_delta, compact, merge_into
 from .ledger import CheckpointLedger
+
+log = logging.getLogger(__name__)
 
 
 class CDCPipeline:
@@ -379,14 +383,12 @@ class CDCPipeline:
                 if r["ms"] is not None
             }
             valid = valid.drop(spc)
-        tiebreakers = ["commit", "content_sha256"]
         if self.pre_dedup and self.strategy != "mor":  # mor dedups inside append
-
             valid = lww_dedup(
                 valid,
                 self.key_cols,
                 seq_col=self.seq_col,
-                tiebreakers=tiebreakers,
+                tiebreakers=self.lake.tiebreakers(),
                 strategy="salted",
             )
         staged = valid.withColumnRenamed(self.seq_col, "_seq").withColumnRenamed(
@@ -405,7 +407,6 @@ class CDCPipeline:
                 self.spark,
                 self.lake,
                 staged,
-                tiebreakers=tiebreakers,
                 batch_id=bid,
                 error_sink=merge_err_sink,
                 pre_dedup=self.pre_dedup,
@@ -448,29 +449,10 @@ class CDCPipeline:
                 self.spark,
                 self.lake,
                 staged,
-                tiebreakers=tiebreakers,
                 batch_id=bid,
                 error_sink=merge_err_sink,
             )
-            # COW lineage: per-bucket min/max applied seq (separate small agg)
-            lineage_rows = (
-                annotated.filter(~bad)
-                .groupBy("_bucket")
-                .agg(
-                    F.min(self.seq_col).alias("min_seq"),
-                    F.max(self.seq_col).alias("max_seq"),
-                    F.count(F.lit(1)).alias("rows"),
-                )
-                .collect()
-            )
-            lineage = {
-                str(r["_bucket"]): {
-                    "min_seq": r["min_seq"],
-                    "max_seq": r["max_seq"],
-                    "rows": r["rows"],
-                }
-                for r in lineage_rows
-            }
+            lineage = res.get("lineage") or {}
 
         n_errors = int(obs.get.get("n_bad") or 0)
         # quarantined rows -> error table (recomputed; rare path)
@@ -620,7 +602,11 @@ class CDCPipeline:
                 if all(v is not None for v in mins.values()):
                     return {str(k): int(v) for k, v in mins.items()}
         except Exception:
-            pass
+            log.warning(
+                "pending-batch min seqs from parquet footers failed; "
+                "falling back to an aggregation over the binlog",
+                exc_info=True,
+            )
         rows = (
             events.filter(F.col(batch_col).isin(list(pending)))
             .groupBy(batch_col)
@@ -650,7 +636,11 @@ class CDCPipeline:
                     key=lambda v: (0, int(v)) if v.lstrip("-").isdigit() else (1, v),
                 )
         except Exception:
-            pass
+            log.warning(
+                "batch ids from the binlog's partition layout failed; "
+                "falling back to a distinct scan",
+                exc_info=True,
+            )
         return [
             r[0]
             for r in events.select(batch_col).distinct().orderBy(batch_col).collect()

@@ -175,20 +175,17 @@ def _winners_chunked(files: list, cols: list[str], key_cols: list[str],
 
 
 def _winners(pdf, key_cols: list[str], tiebreakers: list[str]):
-    """Per-key LWW winner — the pandas mirror of the engine's total order
-    (_seq, then each tiebreaker cast to string with NULL -> '').  Stable
-    sort + drop_duplicates(keep='last'); NaN key components group
-    together (pandas treats NaN as equal in duplicated/merge), matching
-    the JVM side's eqNullSafe."""
-    ord_cols = ["_seq"]
-    pdf = pdf.copy()
-    for i, tb in enumerate(tiebreakers):
-        c = f"_ord{i}"
-        pdf[c] = pdf[tb].astype("string").fillna("")
-        ord_cols.append(c)
-    pdf = pdf.sort_values(ord_cols, kind="mergesort")
-    win = pdf.drop_duplicates(subset=key_cols, keep="last")
-    return win.drop(columns=[c for c in win.columns if c.startswith("_ord")])
+    """Per-key LWW winner — the pandas mirror of
+    :func:`operators.dedup.lww_order_key`: a stable sort on
+    ``(_seq, *tiebreakers)`` by each column's own type with NULL first
+    (Spark's struct ordering puts NULL lowest), then
+    drop_duplicates(keep='last').  NaN key components group together
+    (pandas treats NaN as equal in duplicated/merge), matching the JVM
+    kernel's window and grouping."""
+    pdf = pdf.sort_values(
+        ["_seq", *tiebreakers], kind="mergesort", na_position="first"
+    )
+    return pdf.drop_duplicates(subset=key_cols, keep="last")
 
 
 class LakeChangeFeedDataSource(DataSource):

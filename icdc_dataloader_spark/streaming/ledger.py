@@ -27,10 +27,13 @@ from a crash mid-append is skipped.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import uuid
 
 from ..plans.batchids import BatchIdSet
+
+log = logging.getLogger(__name__)
 
 SEGMENT_ROTATE = 1000
 
@@ -229,16 +232,13 @@ class CheckpointLedger:
                 fh.seek(clean)
                 remainder = fh.read()
             if b"\n" in remainder[:-1] or remainder.endswith(b"\n"):
-                import sys
-
                 os.rename(path, path + ".corrupt")
-                print(
-                    f"ledger segment {seg} is corrupt mid-file at byte "
-                    f"{clean}; retired as {seg}.corrupt — head totals are "
-                    "preserved, per-batch detail beyond the damage is "
-                    "gone; the lake's committed_batch_ids remains the "
-                    "commit source of truth",
-                    file=sys.stderr,
+                log.error(
+                    "ledger segment %s is corrupt mid-file at byte %d; "
+                    "retired as %s.corrupt — head totals are preserved, "
+                    "per-batch detail beyond the damage is gone; the "
+                    "lake's committed_batch_ids remains the commit source "
+                    "of truth", seg, clean, seg,
                 )
             else:
                 with open(path, "r+b") as fh:

@@ -123,7 +123,7 @@ def test_readstream_source_null_keys_and_bucket_pruning(spark, tmp_path):
     the lake directly (the model requires path, so the validated pipeline
     would quarantine NULL-path rows)."""
     from icdc_dataloader_spark.plans.merge import append_delta
-    from icdc_dataloader_spark.repos import TIEBREAKERS, create_repos_table
+    from icdc_dataloader_spark.repos import create_repos_table
     from icdc_dataloader_spark.streaming.feed import LakeChangeFeedReader
 
     lake = create_repos_table(str(tmp_path / "repos"), n_buckets=4)
@@ -136,12 +136,10 @@ def test_readstream_source_null_keys_and_bucket_pruning(spark, tmp_path):
 
     append_delta(spark, lake,
                  spark.createDataFrame([up("rN", None, 1), up("rO", "p", 2)],
-                                       schema),
-                 tiebreakers=TIEBREAKERS, batch_id="b1")
+                                       schema), batch_id="b1")
     v1 = lake.latest_version()
     append_delta(spark, lake,
-                 spark.createDataFrame([up("rN", None, 10)], schema),
-                 tiebreakers=TIEBREAKERS, batch_id="b2")
+                 spark.createDataFrame([up("rN", None, 10)], schema), batch_id="b2")
     v2 = lake.latest_version()
 
     def read_rows(reader, parts):
@@ -166,8 +164,7 @@ def test_readstream_source_null_keys_and_bucket_pruning(spark, tmp_path):
     # (rN2 also has a NULL path -> same NULL-key treatment, likely same
     # bucket traffic): rN must NOT double-report
     append_delta(spark, lake,
-                 spark.createDataFrame([up("rN2", None, 20)], schema),
-                 tiebreakers=TIEBREAKERS, batch_id="b3")
+                 spark.createDataFrame([up("rN2", None, 20)], schema), batch_id="b3")
     v3 = lake.latest_version()
     parts = reader.partitions({"version": v2}, {"version": v3})
     rows = read_rows(reader, parts)
@@ -194,7 +191,6 @@ def test_readstream_survives_mid_stream_schema_evolution(spark, tmp_path):
 
     from icdc_dataloader_spark.plans.merge import append_delta, table_schema
     from icdc_dataloader_spark.repos import (
-        TIEBREAKERS,
         create_repos_table,
         repos_payload_schema,
     )
@@ -207,8 +203,7 @@ def test_readstream_survives_mid_stream_schema_evolution(spark, tmp_path):
         return (repo, "p", f"c{seq}", "py", f"v{seq}", f"h{seq}", seq,
                 "upsert")
 
-    append_delta(spark, lake, spark.createDataFrame([up("rA", 1)], base),
-                 tiebreakers=TIEBREAKERS, batch_id="b1")
+    append_delta(spark, lake, spark.createDataFrame([up("rA", 1)], base), batch_id="b1")
     v1 = lake.latest_version()
 
     feed = read_change_feed_stream(spark, lake.root, start_version=v1)
@@ -217,8 +212,7 @@ def test_readstream_survives_mid_stream_schema_evolution(spark, tmp_path):
          .trigger(processingTime="200 milliseconds").start())
     try:
         append_delta(spark, lake,
-                     spark.createDataFrame([up("rB", 2)], base),
-                     tiebreakers=TIEBREAKERS, batch_id="b2")
+                     spark.createDataFrame([up("rB", 2)], base), batch_id="b2")
         q.processAllAvailable()
         # EVOLVE while the stream runs, then a batch carrying the column
         lake.evolve_schema(
@@ -229,8 +223,7 @@ def test_readstream_survives_mid_stream_schema_evolution(spark, tmp_path):
             spark, lake,
             spark.createDataFrame(
                 [("rC", "p", "c3", "py", "v3", "h3", 3, "upsert", 42)], wide
-            ),
-            tiebreakers=TIEBREAKERS, batch_id="b3",
+            ), batch_id="b3",
         )
         q.processAllAvailable()  # raised DATA_SOURCE_RETURN_SCHEMA_MISMATCH
         assert q.isActive and q.exception() is None

@@ -127,7 +127,6 @@ def test_feed_across_added_column(spark, tmp_path):
 
     from icdc_dataloader_spark.plans.merge import append_delta, table_schema
     from icdc_dataloader_spark.repos import (
-        TIEBREAKERS,
         create_repos_table,
         repos_payload_schema,
     )
@@ -139,13 +138,11 @@ def test_feed_across_added_column(spark, tmp_path):
     def up(repo, seq):
         return (repo, "p", f"c{seq}", "py", f"v{seq}", f"h{seq}", seq, "upsert")
 
-    append_delta(spark, lake, spark.createDataFrame([up("rA", 1)], base),
-                 tiebreakers=TIEBREAKERS, batch_id="b1")
+    append_delta(spark, lake, spark.createDataFrame([up("rA", 1)], base), batch_id="b1")
     v1 = lake.latest_version()
     # pre-evolution update for rA, pre-evolution insert for rB
     append_delta(spark, lake,
-                 spark.createDataFrame([up("rA", 2), up("rB", 3)], base),
-                 tiebreakers=TIEBREAKERS, batch_id="b2")
+                 spark.createDataFrame([up("rA", 2), up("rB", 3)], base), batch_id="b2")
     files_before = {f["path"] for f in lake.snapshot()["files"]}
     lake.evolve_schema(
         table_schema(repos_payload_schema().add("stars", T.LongType()))
@@ -157,8 +154,7 @@ def test_feed_across_added_column(spark, tmp_path):
     append_delta(
         spark, lake,
         spark.createDataFrame([("rC", "p", "c4", "py", "v4", "h4", 4,
-                                "upsert", 42)], wide),
-        tiebreakers=TIEBREAKERS, batch_id="b3",
+                                "upsert", 42)], wide), batch_id="b3",
     )
     v2 = lake.latest_version()
 
@@ -197,8 +193,7 @@ def test_feed_across_type_widen(spark, tmp_path):
                 seq, "upsert")
 
     append_delta(spark, lake,
-                 spark.createDataFrame([up("rA", 1, 7), up("rB", 2, 9)], sch),
-                 tiebreakers=TIEBREAKERS, batch_id="b1")
+                 spark.createDataFrame([up("rA", 1, 7), up("rB", 2, 9)], sch), batch_id="b1")
     v1 = lake.latest_version()
     lake.evolve_schema(
         table_schema(repos_payload_schema().add("stars", T.DoubleType()))
@@ -206,8 +201,7 @@ def test_feed_across_type_widen(spark, tmp_path):
     schd = sch.replace("stars long", "stars double")
     append_delta(
         spark, lake,
-        spark.createDataFrame([up("rA", 3, 2.5)], schd),
-        tiebreakers=TIEBREAKERS, batch_id="b2",
+        spark.createDataFrame([up("rA", 3, 2.5)], schd), batch_id="b2",
     )
     v2 = lake.latest_version()
 

@@ -40,10 +40,10 @@ def _state(spark, lake):
 def test_upsert_insert_then_update(spark, lake):
     b1 = _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "upsert"),
                         ("r1", "b", "c2", "go", "v2", 2, "upsert")])
-    res = merge_into(spark, lake, b1, batch_id="b1", tiebreakers=["commit", "content_sha256"])
+    res = merge_into(spark, lake, b1, batch_id="b1")
     assert res["metrics"]["rows_inserted"] == 2
     b2 = _batch(spark, [("r1", "a", "c3", "python", "v1b", 3, "upsert")])
-    res2 = merge_into(spark, lake, b2, batch_id="b2", tiebreakers=["commit", "content_sha256"])
+    res2 = merge_into(spark, lake, b2, batch_id="b2")
     assert res2["metrics"]["rows_updated"] == 1
     assert _state(spark, lake) == {
         ("r1", "a"): ("c3", "v1b"),
@@ -53,18 +53,18 @@ def test_upsert_insert_then_update(spark, lake):
 
 def test_stale_update_loses(spark, lake):
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c5", "python", "new", 10, "upsert")]),
-               batch_id="b1", tiebreakers=["commit", "content_sha256"])
+               batch_id="b1")
     # late event with lower seq must NOT overwrite
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c1", "python", "old", 5, "upsert")]),
-               batch_id="b2", tiebreakers=["commit", "content_sha256"])
+               batch_id="b2")
     assert _state(spark, lake)[("r1", "a")] == ("c5", "new")
 
 
 def test_idempotent_reapply(spark, lake):
     b = _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "upsert")])
-    merge_into(spark, lake, b, batch_id="b1", tiebreakers=["commit", "content_sha256"])
+    merge_into(spark, lake, b, batch_id="b1")
     v1 = lake.latest_version()
-    res = merge_into(spark, lake, b, batch_id="b1", tiebreakers=["commit", "content_sha256"])
+    res = merge_into(spark, lake, b, batch_id="b1")
     assert res["noop"] is True
     assert lake.latest_version() == v1
     assert len(_state(spark, lake)) == 1
@@ -72,11 +72,11 @@ def test_idempotent_reapply(spark, lake):
 
 def test_new_mode_conflict_quarantined(spark, lake):
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "new")]),
-               batch_id="b1", tiebreakers=["commit", "content_sha256"])
+               batch_id="b1")
     res = merge_into(spark, lake, _batch(spark, [
         ("r1", "a", "c2", "python", "v2", 2, "new"),      # conflict: key live
         ("r1", "b", "c3", "python", "v3", 3, "new"),      # fine
-    ]), batch_id="b2", tiebreakers=["commit", "content_sha256"])
+    ]), batch_id="b2")
     errs = res["errors"].collect()
     assert len(errs) == 1 and errs[0]["reason"] == "node_exists_in_new_mode"
     st = _state(spark, lake)
@@ -86,26 +86,26 @@ def test_new_mode_conflict_quarantined(spark, lake):
 
 def test_delete_tombstone_beats_late_upsert(spark, lake):
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "upsert")]),
-               batch_id="b1", tiebreakers=["commit", "content_sha256"])
+               batch_id="b1")
     merge_into(spark, lake, _batch(spark, [("r1", "a", None, None, None, 10, "delete")]),
-               batch_id="b2", tiebreakers=["commit", "content_sha256"])
+               batch_id="b2")
     assert ("r1", "a") not in _state(spark, lake)
     # late upsert with seq 5 < tombstone seq 10 must stay dead
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c2", "python", "late", 5, "upsert")]),
-               batch_id="b3", tiebreakers=["commit", "content_sha256"])
+               batch_id="b3")
     assert ("r1", "a") not in _state(spark, lake)
     # but a later upsert resurrects
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c3", "python", "back", 11, "upsert")]),
-               batch_id="b4", tiebreakers=["commit", "content_sha256"])
+               batch_id="b4")
     assert _state(spark, lake)[("r1", "a")] == ("c3", "back")
 
 
 def test_time_travel(spark, lake):
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "upsert")]),
-               batch_id="b1", tiebreakers=["commit", "content_sha256"])
+               batch_id="b1")
     v_after_b1 = lake.latest_version()
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c2", "python", "v2", 2, "upsert")]),
-               batch_id="b2", tiebreakers=["commit", "content_sha256"])
+               batch_id="b2")
     old = read_state(spark, lake, version=v_after_b1).collect()
     assert old[0]["content"] == "v1"
     new = read_state(spark, lake).collect()
@@ -115,12 +115,11 @@ def test_time_travel(spark, lake):
 def test_file_pruning_carries_untouched_buckets(spark, lake):
     # load keys across buckets
     rows = [(f"r{i}", "a", "c", "python", f"v{i}", i, "upsert") for i in range(20)]
-    merge_into(spark, lake, _batch(spark, rows), batch_id="b1",
-               tiebreakers=["commit", "content_sha256"])
+    merge_into(spark, lake, _batch(spark, rows), batch_id="b1")
     files_v = {f["path"] for f in lake.snapshot()["files"]}
     # touch one key -> only its bucket rewritten
     merge_into(spark, lake, _batch(spark, [("r0", "a", "c9", "python", "vX", 100, "upsert")]),
-               batch_id="b2", tiebreakers=["commit", "content_sha256"])
+               batch_id="b2")
     snap = lake.snapshot()
     carried = {f["path"] for f in snap["files"]} & files_v
     assert carried, "untouched bucket files must be carried, not rewritten"
@@ -168,7 +167,7 @@ def test_unsafe_widening_rejected(spark, tmp_path):
 def test_vacuum_keeps_live_versions(spark, lake, tmp_path):
     for i in range(4):
         merge_into(spark, lake, _batch(spark, [("r1", "a", f"c{i}", "python", f"v{i}", i, "upsert")]),
-                   batch_id=f"b{i}", tiebreakers=["commit", "content_sha256"])
+                   batch_id=f"b{i}")
     lake.vacuum(keep_last=2)
     # latest still readable
     assert _state(spark, lake)[("r1", "a")] == ("c3", "v3")
@@ -201,7 +200,7 @@ def test_two_writer_commit_race_one_clean_failure(spark, lake, tmp_path):
     import threading
 
     merge_into(spark, lake, _batch(spark, [("r1", "a", "c1", "python", "v1", 1, "upsert")]),
-               batch_id="seed", tiebreakers=["commit", "content_sha256"])
+               batch_id="seed")
     snap = lake.snapshot()
     version = snap["version"] + 1
 

@@ -1,0 +1,183 @@
+"""Every copy of the LWW order picks the same winner.
+
+The order is ``lww_order_key``: ``(_seq, *tiebreakers)`` compared by each
+column's own type, NULL lowest.  Generated batches carry ``_seq`` ties,
+NULL and ``''`` string tiebreakers and a LongType tiebreaker (9 vs 10:
+numeric, not text order).  The winner must be the same under ``lww_dedup``
+(agg, salted, window), ``read_state`` after a MoR append and after
+``compact``, the COW ``merge_into`` and the change feed's pandas fold; in
+the repos table's domain it must also match the independent oracle.
+"""
+
+from __future__ import annotations
+
+import os
+import tempfile
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from icdc_dataloader_spark import oracle
+from icdc_dataloader_spark.operators.dedup import lww_dedup
+from icdc_dataloader_spark.plans.lake import LakeTable
+from icdc_dataloader_spark.plans.merge import (
+    append_delta, compact, merge_into, read_state, resolve, table_schema,
+)
+from icdc_dataloader_spark.repos import TIEBREAKERS, create_repos_table
+from icdc_dataloader_spark.streaming.feed import _winners_chunked
+
+TB = ["tb_s", "tb_l"]
+SCHEMA = "k string, v string, tb_s string, tb_l long, _seq long, _op string"
+PROPS = settings(max_examples=8, deadline=None, database=None)
+
+events = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.integers(1, 3),
+        st.sampled_from([None, "", "x"]),
+        st.sampled_from([None, 9, 10]),
+        st.sampled_from(["upsert", "delete"]),
+    ),
+    min_size=1,
+    max_size=14,
+)
+
+
+def _rank(row):
+    """Python statement of the order: typed, NULL lowest."""
+    k, _v, tb_s, tb_l, seq, _op = row
+    return (seq, tb_s is not None, tb_s or "", tb_l is not None, tb_l or 0)
+
+
+def _distinct_rows(raw):
+    """Rows with a unique order key per key (so the winner is unique),
+    each named by its position in ``v``."""
+    seen, rows = set(), []
+    for k, seq, tb_s, tb_l, op in raw:
+        if (k, seq, tb_s, tb_l) not in seen:
+            seen.add((k, seq, tb_s, tb_l))
+            rows.append((k, f"r{len(rows)}", tb_s, tb_l, seq, op))
+    return rows
+
+
+def _lake(root, name):
+    return LakeTable.create(
+        os.path.join(root, name),
+        table_schema(_payload()),
+        ["k"],
+        n_buckets=2,
+        tiebreakers=TB,
+    )
+
+
+def _payload():
+    from pyspark.sql import types as T
+
+    return T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("tb_s", T.StringType()),
+        T.StructField("tb_l", T.LongType()),
+    ])
+
+
+def _v_by_key(rows):
+    return {r["k"]: r["v"] for r in rows}
+
+
+@PROPS
+@given(raw=events)
+def test_every_lww_path_picks_the_same_winner(spark, raw):
+    rows = _distinct_rows(raw)
+    winners = {}
+    for r in rows:
+        if r[0] not in winners or _rank(r) > _rank(winners[r[0]]):
+            winners[r[0]] = r
+    want_all = {k: r[1] for k, r in winners.items()}
+    want_live = {k: r[1] for k, r in winners.items() if r[5] != "delete"}
+    half = len(rows) // 2
+    batches = [b for b in (rows[:half], rows[half:]) if b]
+    df = spark.createDataFrame(rows, SCHEMA)
+
+    for strategy in ("agg", "salted", "window"):
+        got = lww_dedup(df, ["k"], seq_col="_seq", tiebreakers=TB,
+                        strategy=strategy).collect()
+        assert _v_by_key(got) == want_all, strategy
+
+    with tempfile.TemporaryDirectory() as root:
+        mor, cow = _lake(root, "mor"), _lake(root, "cow")
+        for i, b in enumerate(batches):
+            batch = spark.createDataFrame(b, SCHEMA)
+            append_delta(spark, mor, batch, batch_id=f"b{i}", pre_dedup=False)
+            merge_into(spark, cow, batch, batch_id=f"b{i}")
+
+        files = [
+            (os.path.join(mor.root, f["path"]), f["schema"])
+            for f in mor.snapshot()["files"]
+        ]
+        cols = ["k", "v", "tb_s", "tb_l", "_seq", "_op"]
+        feed = _winners_chunked(files, cols, ["k"], TB)
+        got_feed = {
+            (None if r["k"] is None or r["k"] != r["k"] else r["k"]): r["v"]
+            for r in feed.to_dict("records")
+        }
+        assert got_feed == want_all, "pandas fold"
+
+        assert _v_by_key(read_state(spark, mor).collect()) == want_live, "mor"
+        compact(spark, mor)
+        assert _v_by_key(read_state(spark, mor).collect()) == want_live, (
+            "compact"
+        )
+        assert _v_by_key(read_state(spark, cow).collect()) == want_live, "cow"
+
+
+repos_events = st.lists(
+    st.tuples(
+        st.sampled_from(["r1", "r2"]),
+        st.integers(1, 3),
+        st.sampled_from(["upsert", "delete"]),
+        st.sampled_from(["a", "b", "", None]),
+        st.sampled_from(["x", "y"]),
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@PROPS
+@given(raw=repos_events)
+def test_repos_winner_matches_oracle(spark, raw):
+    """The repos tiebreakers (commit, content_sha256) are strings, where the
+    oracle's NULL -> '' order and the typed order pick the same live rows
+    (the oracle quarantines upserts with an empty commit)."""
+    evs = [
+        {"batch_id": 0, "repo": repo, "path": "p", "seq": seq, "op": op,
+         "commit": commit if op == "delete" else (commit or "a"),
+         "lang": "python", "content": content}
+        for repo, seq, op, commit, content in raw
+    ]
+    want = {
+        (r["repo"], r["path"]): (r["_seq"], r["content_sha256"])
+        for r in oracle.final_live_rows(evs)
+    }
+    rows = [
+        (e["repo"], e["path"], e["commit"], e["lang"],
+         None if e["op"] == "delete" else e["content"],
+         None if e["op"] == "delete" else oracle.sha256(e["content"]),
+         e["seq"], e["op"])
+        for e in evs
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "repo string, path string, commit string, lang string,"
+        " content string, content_sha256 string, _seq long, _op string",
+    )
+    with tempfile.TemporaryDirectory() as root:
+        lake = create_repos_table(os.path.join(root, "repos"), n_buckets=2)
+        assert lake.tiebreakers() == TIEBREAKERS
+        append_delta(spark, lake, df, batch_id="b0", pre_dedup=False)
+        got = {
+            (r["repo"], r["path"]): (r["_seq"], r["content_sha256"])
+            for r in resolve(spark, lake).filter("_op != 'delete'").collect()
+        }
+    assert got == want

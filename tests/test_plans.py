@@ -131,30 +131,89 @@ def test_no_python_udf_in_hot_path(spark):
         assert "ArrowEvalPython" not in plan, f"{name} unexpectedly uses a Python UDF"
 
 
-def test_mor_resolve_has_no_window_sort(spark, tmp_path):
-    """MoR resolve must not window the full payload: the tombstone watermark
-    comes from a pruned delete-only aggregate joined back, and the winner
-    pick is a partial (map-side) aggregation — no reduce-side full-payload
-    Window whose sort chunk grows with rows/partitions (it spilled at low
-    parallelism before)."""
-    from pyspark.sql import functions as F
+REPOS_SCHEMA = (
+    "repo string, path string, commit string, lang string, content string,"
+    " content_sha256 string, _seq long, _op string"
+)
 
-    from icdc_dataloader_spark.plans.merge import append_delta, resolve
+
+def _payload_exchanges(plan: str) -> int:
+    return plan.count("Exchange ")
+
+
+def test_resolve_users_plan_one_payload_exchange(spark, tmp_path):
+    """read_state, each side of changes_between, compact and the COW
+    merge_into all run the one resolve kernel: the payload moves once
+    (repartition by _bucket) and is never joined — the tombstone
+    watermark is a window over (_bucket, keys), not a join."""
+    from icdc_dataloader_spark.plans.merge import (
+        append_delta, compact, merge_into, read_state, resolve,
+    )
     from icdc_dataloader_spark.repos import create_repos_table
 
-    lake = create_repos_table(str(tmp_path / "t"), n_buckets=4)
     b = spark.createDataFrame(
         [("r1", "p1", "c1", "py", "x", None, 1, "upsert"),
          ("r1", "p1", None, None, None, None, 2, "delete"),
          ("r1", "p1", "c3", "py", "y", None, 3, "upsert")],
-        "repo string, path string, commit string, lang string, content string,"
-        " content_sha256 string, _seq long, _op string",
+        REPOS_SCHEMA,
     )
+    lake = create_repos_table(str(tmp_path / "mor"), n_buckets=4)
     append_delta(spark, lake, b, batch_id="b1")
-    df = resolve(spark, lake)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "partial_max_by" in plan, "winner pick must partial-aggregate map-side"
-    # the delete-watermark scan must be pruned to the key/seq/op columns
-    del_scan = [seg for seg in plan.split("ReadSchema:")[1:] if "content" not in seg.splitlines()[0]]
-    assert del_scan, "tombstone watermark scan must not read the payload columns"
+    v = lake.latest_version()
+    bks = [0, 1, 2, 3]
+    plans = {
+        "read_state": _plan(read_state(spark, lake)),
+        # the two sides changes_between diffs
+        "changes_old": _plan(resolve(spark, lake, version=v, buckets=bks,
+                                     project=["repo", "path", "_seq"])),
+        "changes_new": _plan(resolve(spark, lake, version=v, buckets=bks)),
+    }
+
+    def capture(target, name):
+        write = target.write_data_files
+
+        def wrapped(df, *a, **k):
+            plans[name] = _plan(df)
+            return write(df, *a, **k)
+
+        target.write_data_files = wrapped
+
+    capture(lake, "compact")
+    compact(spark, lake)
+    cow = create_repos_table(str(tmp_path / "cow"), n_buckets=4)
+    merge_into(spark, cow, b, batch_id="c1")
+    capture(cow, "merge_into")
+    merge_into(spark, cow, b.withColumn("_seq", F.col("_seq") + 10),
+               batch_id="c2")
+    for name, plan in plans.items():
+        assert _payload_exchanges(plan) == 1, (name, plan)
+        assert "Join" not in plan, (name, plan)
+
+
+def test_cow_apply_batch_job_count(spark, tmp_path):
+    """A common-path COW batch (no quarantine, no NEW conflict) runs at
+    most 4 Spark jobs: the per-bucket lineage aggregate and the bucket
+    rewrite, each a shuffle-map job plus a result job under AQE."""
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    pipe = make_pipeline(spark, str(tmp_path / "p"), n_buckets=4,
+                         strategy="cow")
+
+    def batch(seq0):
+        return spark.createDataFrame(
+            [(f"r{i % 5}", f"p{i}", f"c{seq0 + i}", "python", f"body {i}",
+              seq0 + i, "upsert") for i in range(40)],
+            "repo string, path string, commit string, lang string,"
+            " content string, seq long, op string",
+        )
+
+    pipe.apply_batch(batch(0), "b0")  # first batch: warm the plan
+    sc = spark.sparkContext
+    sc.setJobGroup("cow-apply-batch", "job count")
+    try:
+        res = pipe.apply_batch(batch(100), "b1")
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("cow-apply-batch")
+    assert res["metrics"]["rows_updated"] == 40
+    assert len(jobs) <= 4, sorted(jobs)

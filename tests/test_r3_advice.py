@@ -133,13 +133,9 @@ def test_null_key_tombstone_lineage_reset(spark, tmp_path):
             " content string, content_sha256 string, _seq long, _op string",
         )
 
-    tb = ["commit", "content_sha256"]
-    append_delta(spark, lake, batch([("r1", None, "c1", "py", "v1", "h1", 1, "upsert")]),
-                 tiebreakers=tb, batch_id="b1")
-    append_delta(spark, lake, batch([("r1", None, None, None, None, None, 2, "delete")]),
-                 tiebreakers=tb, batch_id="b2")
-    append_delta(spark, lake, batch([("r1", None, "c3", "py", "v3", "h3", 3, "upsert")]),
-                 tiebreakers=tb, batch_id="b3")
+    append_delta(spark, lake, batch([("r1", None, "c1", "py", "v1", "h1", 1, "upsert")]), batch_id="b1")
+    append_delta(spark, lake, batch([("r1", None, None, None, None, None, 2, "delete")]), batch_id="b2")
+    append_delta(spark, lake, batch([("r1", None, "c3", "py", "v3", "h3", 3, "upsert")]), batch_id="b3")
 
     out = resolve(spark, lake).filter(F.col("path").isNull()).collect()
     assert len(out) == 1

@@ -62,15 +62,13 @@ def test_changes_between_null_key(spark, tmp_path):
     lake = create_repos_table(str(tmp_path / "repos"), n_buckets=1)
     append_delta(
         spark, lake,
-        _batch(spark, [_up("rN", None, 1), _up("rO", "p", 2)]),
-        tiebreakers=TIEBREAKERS, batch_id="b1",
+        _batch(spark, [_up("rN", None, 1), _up("rO", "p", 2)]), batch_id="b1",
     )
     v1 = lake.latest_version()
 
     # rO updated, rN (NULL path) untouched -> rN must be SILENT
     append_delta(
-        spark, lake, _batch(spark, [_up("rO", "p", 10)]),
-        tiebreakers=TIEBREAKERS, batch_id="b2",
+        spark, lake, _batch(spark, [_up("rO", "p", 10)]), batch_id="b2",
     )
     v2 = lake.latest_version()
     rows = changes_between(spark, lake, v1, v2).collect()
@@ -80,8 +78,7 @@ def test_changes_between_null_key(spark, tmp_path):
 
     # rN updated -> exactly one update row, NULL key preserved
     append_delta(
-        spark, lake, _batch(spark, [_up("rN", None, 11)]),
-        tiebreakers=TIEBREAKERS, batch_id="b3",
+        spark, lake, _batch(spark, [_up("rN", None, 11)]), batch_id="b3",
     )
     v3 = lake.latest_version()
     rows = changes_between(spark, lake, v2, v3).collect()
@@ -91,8 +88,7 @@ def test_changes_between_null_key(spark, tmp_path):
 
     # rN deleted -> one delete row, key coalesced from the OLD side
     append_delta(
-        spark, lake, _batch(spark, [_del("rN", None, 12)]),
-        tiebreakers=TIEBREAKERS, batch_id="b4",
+        spark, lake, _batch(spark, [_del("rN", None, 12)]), batch_id="b4",
     )
     v4 = lake.latest_version()
     rows = changes_between(spark, lake, v3, v4).collect()
@@ -102,8 +98,7 @@ def test_changes_between_null_key(spark, tmp_path):
 
     # NULL-keyed insert for completeness
     append_delta(
-        spark, lake, _batch(spark, [_up("rM", None, 13)]),
-        tiebreakers=TIEBREAKERS, batch_id="b5",
+        spark, lake, _batch(spark, [_up("rM", None, 13)]), batch_id="b5",
     )
     v5 = lake.latest_version()
     rows = changes_between(spark, lake, v4, v5).collect()
@@ -260,11 +255,9 @@ def test_crash_heal_recomputes_quarantine_hold(spark, tmp_path):
 def test_resolve_bucket_restricted_skips_lww_when_delta_free(spark, tmp_path):
     lake = create_repos_table(str(tmp_path / "repos"), n_buckets=8)
     rows = [_up(f"r{i}", "p", i + 1) for i in range(40)]
-    append_delta(spark, lake, _batch(spark, rows),
-                 tiebreakers=TIEBREAKERS, batch_id="b1")
+    append_delta(spark, lake, _batch(spark, rows), batch_id="b1")
     compact(spark, lake)  # all-base state
-    append_delta(spark, lake, _batch(spark, [_up("r1", "p", 100)]),
-                 tiebreakers=TIEBREAKERS, batch_id="b2")
+    append_delta(spark, lake, _batch(spark, [_up("r1", "p", 100)]), batch_id="b2")
 
     touched = {f["bucket"] for f in lake.delta_files()}
     assert touched and len(touched) < 8
@@ -360,8 +353,7 @@ def test_colocate_salt_same_state_multi_file_buckets(spark, tmp_path):
         rows = [_up("rH", "p", s) for s in range(1, 60)] + [
             _up(f"r{i}", "p", 100 + i) for i in range(10)
         ] + [_del("rH", "p", 200)] + [_up("rH", "p", 300)]
-        append_delta(spark, lake, _batch(spark, rows),
-                     tiebreakers=TIEBREAKERS, batch_id="b1",
+        append_delta(spark, lake, _batch(spark, rows), batch_id="b1",
                      pre_dedup=False, colocate=True, colocate_salt=salt)
         return lake
 

@@ -7,10 +7,9 @@ pin the arguments' edge cases directly:
    explode + aggregate — NULL/empty-text docs must still produce a
    signature row (explode drops NULL/empty ARRAYS, and _shingles must
    therefore never return one).
-2. resolve(bucket_partition=True) — the compaction path's
-   window-watermark shape — must produce the same rows as the read-path
-   join shape, including the delete->recreate created-lineage reset and
-   NULL-keyed rows.
+2. resolve has one shape — the window-watermark kernel compaction
+   uses — and it must keep the delete->recreate created-lineage reset
+   and NULL-keyed rows, before and after compaction.
 3. the streaming feed's chunked winner fold must equal the whole-frame
    reduction across row-group boundaries, and read() must emit multiple
    Arrow batches when the diff exceeds the batch size.
@@ -23,7 +22,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from icdc_dataloader_spark.repos import TIEBREAKERS, create_repos_table
+from icdc_dataloader_spark.repos import create_repos_table
 
 REPOS_SCHEMA = (
     "repo string, path string, commit string, lang string,"
@@ -79,8 +78,7 @@ def _mk_lake(spark, tmp_path, batches):
     lake = create_repos_table(str(tmp_path / "repos"), n_buckets=4)
     for bid, rows in enumerate(batches):
         append_delta(
-            spark, lake, spark.createDataFrame(rows, REPOS_SCHEMA),
-            tiebreakers=TIEBREAKERS, batch_id=f"b{bid}",
+            spark, lake, spark.createDataFrame(rows, REPOS_SCHEMA), batch_id=f"b{bid}",
         )
     return lake
 
@@ -93,10 +91,11 @@ def _del(repo, path, seq):
     return (repo, path, None, None, None, None, seq, "delete")
 
 
-def test_resolve_bucket_partition_parity(spark, tmp_path):
-    """Window-watermark (compaction) shape == join (read) shape, on a lake
-    exercising delete->recreate lineage reset and NULL key components."""
-    from icdc_dataloader_spark.plans.merge import resolve
+def test_resolve_one_shape_lineage_and_null_keys(spark, tmp_path):
+    """The one resolve shape, on a lake exercising delete->recreate
+    lineage reset and NULL key components: a MoR read and the compacted
+    base hold the same rows."""
+    from icdc_dataloader_spark.plans.merge import compact, resolve
 
     lake = _mk_lake(
         spark, tmp_path,
@@ -108,12 +107,13 @@ def test_resolve_bucket_partition_parity(spark, tmp_path):
         ],
     )
     read_shape = resolve(spark, lake).collect()
-    compact_shape = resolve(spark, lake, bucket_partition=True).collect()
-    key = lambda r: (r["repo"] or "", r["path"] or "", r["_seq"])
-    assert sorted(map(tuple, read_shape), key=lambda t: str(t)) == sorted(
-        map(tuple, compact_shape), key=lambda t: str(t)
+    compact(spark, lake)
+    assert not lake.delta_files()
+    compacted = resolve(spark, lake).collect()
+    assert sorted(map(tuple, read_shape), key=str) == sorted(
+        map(tuple, compacted), key=str
     )
-    by_key = {(r["repo"], r["path"]): r for r in compact_shape}
+    by_key = {(r["repo"], r["path"]): r for r in compacted}
     # created lineage RESET across the delete->recreate (not seq 1/3)
     assert by_key[("r1", "p1")]["_created_seq"] == 20
     assert by_key[("rN", None)]["_created_seq"] == 22
@@ -209,8 +209,7 @@ def test_feed_read_emits_multiple_arrow_batches(spark, tmp_path):
     append_delta(
         spark, lake,
         spark.createDataFrame([_up(f"r{i}", "p", i) for i in range(25)],
-                              REPOS_SCHEMA),
-        tiebreakers=TIEBREAKERS, batch_id="b0",
+                              REPOS_SCHEMA), batch_id="b0",
     )
     reader = LakeChangeFeedReader({"path": lake.root})
     reader.ARROW_BATCH_ROWS = 10

@@ -83,7 +83,9 @@ def test_transient_failure_recovers_within_budget(spark, tmp_path):
 
 def test_mor_created_seq_resets_after_delete_recreate(spark, tmp_path):
     """ADVICE: MoR resolve() resurrected pre-delete created lineage; COW
-    resets it.  Both paths must agree on _created_seq for recreated keys."""
+    resets it.  Both paths must agree on _created_seq for recreated keys,
+    whether the delete->recreate spans batches or sits inside one batch
+    (no in-batch pre-dedup: every event reaches the merge)."""
     from icdc_dataloader_spark.plans.lake import LakeTable
     from icdc_dataloader_spark.plans.merge import (
         append_delta, merge_into, resolve, table_schema,
@@ -93,29 +95,37 @@ def test_mor_created_seq_resets_after_delete_recreate(spark, tmp_path):
     payload = T.StructType(
         [T.StructField("id", T.StringType()), T.StructField("v", T.LongType())]
     )
-
-    def batches():
-        return [
-            [("k", 1, 10, "upsert")],          # created at seq 10
-            [("k", None, 20, "delete")],       # tombstone
-            [("k", 3, 30, "upsert")],          # recreate: created must be 30
-        ]
+    events = [
+        ("k", 1, 10, "upsert"),          # created at seq 10
+        ("k", None, 20, "delete"),       # tombstone
+        ("k", 3, 30, "upsert"),          # recreate: created must be 30
+    ]
+    inputs = {
+        "one_event_per_batch": [[e] for e in events],
+        "one_batch": [events],
+    }
 
     def stage(rows):
         return spark.createDataFrame(
-            [(r[0], r[1]) for r in rows], payload
-        ).withColumn("_seq", F.lit(rows[0][2])).withColumn("_op", F.lit(rows[0][3]))
+            rows, "id string, v long, _seq long, _op string"
+        )
 
-    cow = LakeTable.create(str(tmp_path / "cow"), table_schema(payload), ["id"], 2)
-    mor = LakeTable.create(str(tmp_path / "mor"), table_schema(payload), ["id"], 2)
-    for i, rows in enumerate(batches()):
-        merge_into(spark, cow, stage(rows), batch_id=f"c{i}")
-        append_delta(spark, mor, stage(rows), batch_id=f"m{i}")
+    for name, batches in inputs.items():
+        cow = LakeTable.create(
+            str(tmp_path / name / "cow"), table_schema(payload), ["id"], 2
+        )
+        mor = LakeTable.create(
+            str(tmp_path / name / "mor"), table_schema(payload), ["id"], 2
+        )
+        for i, rows in enumerate(batches):
+            merge_into(spark, cow, stage(rows), batch_id=f"c{i}")
+            append_delta(spark, mor, stage(rows), batch_id=f"m{i}",
+                         pre_dedup=False)
 
-    cow_row = resolve(spark, cow).filter("id='k'").collect()[0]
-    mor_row = resolve(spark, mor).filter("id='k'").collect()[0]
-    assert cow_row["_created_seq"] == 30
-    assert mor_row["_created_seq"] == cow_row["_created_seq"]
+        cow_row = resolve(spark, cow).filter("id='k'").collect()[0]
+        mor_row = resolve(spark, mor).filter("id='k'").collect()[0]
+        assert cow_row["_created_seq"] == 30, name
+        assert mor_row["_created_seq"] == cow_row["_created_seq"], name
 
 
 def test_low_water_skips_missing_lineage(tmp_path):
