@@ -25,7 +25,69 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 REPEATS = 3
+N_BUCKETS = 64
+UPDATE_ROWS = 100_000
+
+
+def build_lake(spark, root, n_rows):
+    from icdc_dataloader_spark.plans.lake import LakeTable
+    from icdc_dataloader_spark.plans.merge import (
+        append_delta, compact, table_schema,
+    )
+    from icdc_dataloader_spark.repos import TIEBREAKERS, repos_payload_schema
+
+    lake = LakeTable.create(
+        root, table_schema(repos_payload_schema()), ["repo", "path"],
+        n_buckets=N_BUCKETS, tiebreakers=TIEBREAKERS,
+    )
+    base = spark.range(n_rows).select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("repo"),
+        F.lit("p").alias("path"),
+        F.concat(F.lit("c"), F.col("id").cast("string")).alias("commit"),
+        F.lit("python").alias("lang"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("content"),
+        F.sha2(F.concat(F.lit("v"), F.col("id").cast("string")), 256)
+        .alias("content_sha256"),
+        (F.col("id") + 1).alias("_seq"),
+        F.lit("upsert").alias("_op"),
+    )
+    append_delta(spark, lake, base,
+                 batch_id="b0", pre_dedup=False)
+    compact(spark, lake)
+    return lake
+
+
+def increment(spark, lake, n_rows, k, seq_base):
+    """100k updates confined to buckets [0, k)."""
+    from icdc_dataloader_spark.plans.lake import bucket_expr
+    from icdc_dataloader_spark.plans.merge import append_delta
+
+    upd = (
+        spark.range(n_rows)
+        .select(
+            F.concat(F.lit("r"), F.col("id").cast("string")).alias("repo"),
+            F.lit("p").alias("path"),
+            F.col("id"),
+        )
+        .withColumn("_b", bucket_expr(["repo", "path"], N_BUCKETS))
+        .filter(F.col("_b") < k)
+        .limit(UPDATE_ROWS)
+        .select(
+            "repo", "path",
+            F.concat(F.lit("C"), F.col("id").cast("string")).alias("commit"),
+            F.lit("python").alias("lang"),
+            F.concat(F.lit("V"), F.col("id").cast("string")).alias("content"),
+            F.sha2(F.concat(F.lit("V"), F.col("id").cast("string")), 256)
+            .alias("content_sha256"),
+            (F.lit(seq_base) + F.col("id")).alias("_seq"),
+            F.lit("upsert").alias("_op"),
+        )
+    )
+    append_delta(spark, lake, upd,
+                 batch_id=f"u{k}_{seq_base}", pre_dedup=False)
 
 
 def legacy_read(reader, p):
@@ -61,8 +123,6 @@ def legacy_read(reader, p):
     out = j[j["change_type"].notna()][
         p.key_cols + ["change_type"] + p.payload_cols]
     out = out.astype(object).where(pd.notnull(out), None)
-    for c in p.int_cols:
-        out[c] = out[c].map(lambda v: None if v is None else int(v))
     for row in out.itertuples(index=False, name=None):
         yield row
 
@@ -124,7 +184,6 @@ def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
-    from bench.feed_bench import build_lake, increment
     from icdc_dataloader_spark.plans.merge import changes_between
     from icdc_dataloader_spark.session import get_spark
     from icdc_dataloader_spark.streaming.feed import LakeChangeFeedReader

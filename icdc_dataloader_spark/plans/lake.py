@@ -343,11 +343,18 @@ class LakeTable:
         pruning: untouched buckets are never opened).
         """
         snap = self.snapshot(version)
-        target = T.StructType.fromJson(json.loads(snap["schema"]))
         files = snap["files"]
         if buckets is not None:
             bset = set(buckets)
             files = [f for f in files if f["bucket"] in bset]
+        return self.read_files(
+            spark, files, T.StructType.fromJson(json.loads(snap["schema"]))
+        )
+
+    def read_files(
+        self, spark: SparkSession, files: list[dict], target: T.StructType
+    ) -> DataFrame:
+        """Scan these manifest entries, each reconciled to ``target``."""
         if not files:
             return spark.createDataFrame([], target)
 

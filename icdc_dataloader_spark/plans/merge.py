@@ -17,9 +17,9 @@ One order, one kernel.  The LWW total order is
 :func:`operators.dedup.lww_order_key` over ``(_seq, *tiebreakers)`` with
 the table's own tiebreakers (:meth:`LakeTable.tiebreakers`).  Every Spark
 path that picks a per-key winner — the merge-on-read :func:`resolve`
-(``read_state`` and both sides of :func:`changes_between`),
-:func:`compact` and the copy-on-write :func:`merge_into` — runs the same
-kernel, :func:`_lww_groups`:
+(``read_state``), the change feed :func:`changes_between` (both
+snapshots' winners in one pass), :func:`compact` and the copy-on-write
+:func:`merge_into` — runs the same kernel, :func:`_lww_groups`:
 
 1. ``repartition(n_buckets, _bucket)`` — the only payload exchange;
 2. the key's tombstone watermark ``_del_max``: a window max over
@@ -116,30 +116,15 @@ def resolve(
     lake: LakeTable,
     version: int | None = None,
     buckets: list[int] | None = None,
-    project: list[str] | None = None,
 ) -> DataFrame:
     """Current table rows with merge-on-read deltas resolved.
 
     Delta-free reads (COW snapshots, freshly compacted buckets) return the
     scan as-is.  With deltas, the rows go through the resolve kernel
     (:func:`_lww_groups`), so the output is partitioned one bucket per
-    partition.  ``project`` narrows the scan to these columns plus what
-    the kernel needs (keys, ``_bucket``, lineage, tiebreakers) so Catalyst
-    prunes the parquet read.
+    partition.
     """
     df = lake.read(spark, version=version, buckets=buckets)
-    if project is not None:
-        needed = [
-            c
-            for c in dict.fromkeys(
-                list(project)
-                + lake.key_cols()
-                + ["_seq", "_op", "_bucket", "_created_seq"]
-                + lake.tiebreakers()
-            )
-            if c in df.columns
-        ]
-        df = df.select(*needed)
     deltas = lake.delta_files(version)
     if buckets is not None:
         # bucket-targeted compaction makes mixed states the norm: a
@@ -150,6 +135,17 @@ def resolve(
     if not deltas:
         return df
     return _winner_rows(_lww_groups(df, lake))
+
+
+def _file_diff(lake: LakeTable, v_from: int, v_to: int):
+    """Both snapshots' manifest entries keyed by path, and the buckets
+    whose file set changed between them."""
+    old, new = ({f["path"]: f for f in lake.snapshot(v)["files"]}
+                for v in (v_from, v_to))
+    changed = {f["bucket"] for p, f in new.items() if p not in old} | {
+        f["bucket"] for p, f in old.items() if p not in new
+    }
+    return old, new, changed
 
 
 def changed_buckets(
@@ -166,14 +162,7 @@ def changed_buckets(
     nothing behind at v_to — self-review round 4: an added-only diff
     silently dropped the delete events for every key in such a bucket).
     """
-    old_files = lake.snapshot(v_from)["files"]
-    new_files = lake.snapshot(v_to)["files"]
-    old_paths = {f["path"] for f in old_files}
-    new_paths = {f["path"] for f in new_files}
-    return sorted(
-        {f["bucket"] for f in new_files if f["path"] not in old_paths}
-        | {f["bucket"] for f in old_files if f["path"] not in new_paths}
-    )
+    return sorted(_file_diff(lake, v_from, v_to)[2])
 
 
 def changes_between(
@@ -189,12 +178,15 @@ def changes_between(
     Output: key columns, ``change_type`` ('insert' | 'update' |
     'delete'), and the v_to payload (NULL payload for deletes).
 
-    Plan shape: both states are resolved ONLY over :func:`changed_buckets`
-    (file-level pruning from manifests — untouched buckets are never
-    opened), then a single key full-outer join; winners are compared by
-    ``_seq`` (same key + same winning seq == same row, by LWW totality).
-    A key deleted before v_from and still dead at v_to emits nothing,
-    even if its tombstone was GC'd in between.
+    Plan shape: one kernel pass, no join.  Each file of the
+    :func:`changed_buckets` (manifest pruning: untouched buckets are never
+    opened) is read once at ``schema(v_to)``, its rows flagged with the
+    snapshots holding it; files only in ``v_from`` skip the payload.
+    :func:`_lww_groups` takes both winners as two aggregates of its one
+    grouping, ``_o`` and ``_n`` (Catalyst prunes the unused window).
+    Winners are compared by ``_seq`` (same key + same winning seq == same
+    row, by LWW totality); NULL key components group together.  A key
+    dead at both versions emits nothing, even if its tombstone was GC'd.
     """
     v_to = lake.latest_version() if v_to is None else v_to
     # a consumer that lagged past vacuum retention cannot resume
@@ -205,57 +197,57 @@ def changes_between(
         hint="Re-bootstrap from read_state() and resume the feed from "
              "the current version.",
     )
-    bks = changed_buckets(lake, v_from, v_to)
-    key_cols = lake.key_cols()
+    old, new, bks = _file_diff(lake, v_from, v_to)
+    key_cols, tiebreakers = lake.key_cols(), lake.tiebreakers()
+    target = lake.schema(v_to)
     payload_cols = [
-        f.name for f in lake.schema(v_to).fields
+        f.name for f in target.fields
         if f.name not in INTERNAL_COLS and f.name not in key_cols
     ]
+    # (files, in v_from, in v_to); added and removed files all lie in
+    # changed buckets.  No empty reads: each starts Python workers.
+    groups = [g for g in (
+        ([f for p, f in old.items() if p not in new], True, False),
+        ([f for p, f in new.items() if p in old and f["bucket"] in bks],
+         True, True),
+        ([f for p, f in new.items() if p not in old], False, True),
+    ) if g[0]] or [([], False, True)]
+    rows = None
+    for files, in_old, in_new in groups:
+        df = lake.read_files(spark, files, target)
+        if not in_new:  # only the winner's _seq and _op are needed
+            df = df.select(*[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                if f.name in payload_cols and f.name not in tiebreakers
+                else F.col(f.name)
+                for f in target.fields
+            ])
+        df = df.withColumn("_in_old", F.lit(in_old)).withColumn(
+            "_in_new", F.lit(in_new))
+        rows = df if rows is None else rows.unionByName(df)
 
-    # OLD side only contributes keys + winning seq: project so the scan
-    # reads no payload bytes (Catalyst prunes the parquet columns)
-    old = (
-        resolve(spark, lake, version=v_from, buckets=bks,
-                project=list(key_cols) + ["_seq"])
-        .filter(F.col("_op") != OP_DELETE)
-        .select(*key_cols, F.col("_seq").alias("_old_seq"))
-    )
-    new = (
-        resolve(spark, lake, version=v_to, buckets=bks)
-        .filter(F.col("_op") != OP_DELETE)
-        .select(*key_cols, F.col("_seq").alias("_new_seq"), *payload_cols)
-    )
-    # NULL-keyed rows are first-class in this lake (the kernel groups NULL
-    # key components together): the old/new states must be matched
-    # null-safely too, else a live NULL-keyed key present in both snapshots
-    # fails to match itself and double-reports as insert+delete
-    old = old.select(
-        *[F.col(k).alias(f"_ok_{k}") for k in key_cols], "_old_seq"
-    )
-    cond = None
-    for k in key_cols:
-        c = F.col(k).eqNullSafe(F.col(f"_ok_{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = new.join(old, cond, "full_outer")
+    order = lww_order_key("_seq", *tiebreakers)
+
+    def winner(flag: str, *cols: str) -> F.Column:
+        on = F.col(flag)
+        return F.max_by(F.when(on, F.struct(*cols)), F.when(on, order))
+
+    old_live = F.coalesce(F.col("_o._op") != OP_DELETE, F.lit(False))
+    new_live = F.coalesce(F.col("_n._op") != OP_DELETE, F.lit(False))
     change = (
-        F.when(F.col("_old_seq").isNull(), F.lit("insert"))
-        .when(F.col("_new_seq").isNull(), F.lit("delete"))
-        .when(F.col("_new_seq") != F.col("_old_seq"), F.lit("update"))
+        F.when(new_live & ~old_live, "insert")
+        .when(old_live & ~new_live, "delete")
+        .when(new_live & (F.col("_n._seq") != F.col("_o._seq")), "update")
     )
-    # delete rows carry the key from the OLD side only; a genuinely-NULL
-    # key component is NULL on whichever side matched, so the coalesce of a
-    # matched pair is that same value
-    key_out = [
-        F.when(F.col("_new_seq").isNull(), F.col(f"_ok_{k}"))
-        .otherwise(F.col(k))
-        .alias(k)
-        for k in key_cols
-    ]
-    return (
-        joined.withColumn("change_type", change)
-        .filter(F.col("change_type").isNotNull())
-        .select(*key_out, "change_type", *payload_cols)
-    )
+    return _lww_groups(
+        rows, lake,
+        winner("_in_old", "_seq", "_op").alias("_o"),
+        winner("_in_new", "_seq", "_op", *payload_cols).alias("_n"),
+    ).select(
+        *key_cols,
+        change.alias("change_type"),
+        *[F.when(new_live, F.col("_n")[c]).alias(c) for c in payload_cols],
+    ).filter(F.col("change_type").isNotNull())
 
 
 def read_state(spark: SparkSession, lake: LakeTable, version: int | None = None) -> DataFrame:

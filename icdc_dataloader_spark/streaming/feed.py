@@ -5,8 +5,9 @@ incremental-read analogue).  This module lets a consumer TAIL the feed:
 
 1. :class:`ChangeFeedConsumer` — a checkpointed cursor + poll loop over
    the native DataFrame path.  This is the 100 TB shape: each poll is one
-   `changes_between` call (manifest-diff bucket pruning, JVM-side LWW
-   resolve), and the cursor advances only on consumer commit
+   `changes_between` call (manifest-diff bucket pruning, each changed
+   bucket's files read once, both snapshots' LWW winners taken in one
+   JVM-side kernel pass), and the cursor advances only on consumer commit
    (at-least-once delivery; consumers are expected to be idempotent by
    version range — the same contract the write side keeps per batch_id).
 
@@ -42,9 +43,9 @@ from pyspark.sql.datasource import (
 )
 
 from ..plans.lake import LakeTable
-from ..plans.merge import INTERNAL_COLS, changed_buckets, changes_between
-
-OP_DELETE = "delete"
+from ..plans.merge import (
+    INTERNAL_COLS, OP_DELETE, changed_buckets, changes_between,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +119,18 @@ class _BucketDiffPartition(InputPartition):
     key_cols: list = field(default_factory=list)
     tiebreakers: list = field(default_factory=list)
     payload_cols: list = field(default_factory=list)
-    int_cols: list = field(default_factory=list)  # integral payload cols
+
+
+def _to_pandas(table):
+    """Arrow -> pandas with integer columns as nullable ``Int64`` (plain
+    ``to_pandas`` makes an int column holding a NULL float64, inexact from
+    2^53 on)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    return table.to_pandas(
+        types_mapper=lambda t: pd.Int64Dtype() if pa.types.is_integer(t) else None
+    )
 
 
 def _load_aligned(files: list, cols: list[str]):
@@ -131,7 +143,7 @@ def _load_aligned(files: list, cols: list[str]):
     for path, schema_json in files:
         have = {f["name"] for f in json.loads(schema_json)["fields"]}
         want = [c for c in cols if c in have]
-        pdf = pq.read_table(path, columns=want).to_pandas()
+        pdf = _to_pandas(pq.read_table(path, columns=want))
         for c in cols:
             if c not in pdf.columns:
                 pdf[c] = None
@@ -161,7 +173,7 @@ def _winners_chunked(files: list, cols: list[str], key_cols: list[str],
         want = [c for c in cols if c in have]
         pf = pq.ParquetFile(path)
         for rg in range(pf.metadata.num_row_groups):
-            pdf = pf.read_row_group(rg, columns=want).to_pandas()
+            pdf = _to_pandas(pf.read_row_group(rg, columns=want))
             for c in cols:
                 if c not in pdf.columns:
                     pdf[c] = None
@@ -276,12 +288,6 @@ class LakeChangeFeedReader(DataSourceStreamReader):
             f.name for f in self.declared_schema.fields
             if f.name not in key_cols and f.name != "change_type"
         ]
-        int_cols = [
-            f.name for f in self.declared_schema.fields
-            if f.name in payload_cols
-            and isinstance(f.dataType, (T.ByteType, T.ShortType,
-                                        T.IntegerType, T.LongType))
-        ]
         old_by_bucket: dict[int, list] = {}
         new_by_bucket: dict[int, list] = {}
         for snap_v, acc in ((v_from, old_by_bucket), (v_to, new_by_bucket)):
@@ -297,7 +303,6 @@ class LakeChangeFeedReader(DataSourceStreamReader):
                 key_cols=key_cols,
                 tiebreakers=tiebreakers,
                 payload_cols=payload_cols,
-                int_cols=int_cols,
             )
             for b in changed_buckets(lake, v_from, v_to)
         ]
@@ -336,9 +341,7 @@ class LakeChangeFeedReader(DataSourceStreamReader):
         j = new.merge(old, on=p.key_cols, how="outer")  # NaN keys match
         ins = j["_old_seq"].isna() & j["_new_seq"].notna()
         dele = j["_new_seq"].isna() & j["_old_seq"].notna()
-        upd = j["_new_seq"].notna() & j["_old_seq"].notna() & (
-            j["_new_seq"] != j["_old_seq"]
-        )
+        upd = (j["_new_seq"] != j["_old_seq"]).fillna(False) & ~(ins | dele)
         j["change_type"] = None
         j.loc[ins, "change_type"] = "insert"
         j.loc[dele, "change_type"] = "delete"
@@ -346,15 +349,12 @@ class LakeChangeFeedReader(DataSourceStreamReader):
         out = j[j["change_type"].notna()][
             p.key_cols + ["change_type"] + p.payload_cols
         ]
+        # integer columns stay exact: they load as nullable Int64
         out = out.astype(object).where(pd.notnull(out), None)
-        for c in p.int_cols:
-            # the outer merge float-ifies nullable int64 payload columns;
-            # restore integral values for the declared LongType fields
-            out[c] = out[c].map(lambda v: None if v is None else int(v))
         # emit pyarrow RecordBatches, not per-row Python tuples: the
         # datasource API ships Arrow batches to the JVM wholesale, while
         # tuple yield pays per-row pickling + per-row conversion (round-5
-        # verdict item; measured in bench/feed_bench.py).  The batch
+        # verdict item; measured in bench/feed_stream_bench.py).  The batch
         # schema must match the declared source schema exactly.
         from pyspark.sql.pandas.types import to_arrow_schema
 

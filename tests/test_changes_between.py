@@ -1,13 +1,24 @@
 """Incremental change feed between snapshots (plans/merge.changes_between)
 — the consume side of the CDC engine (Iceberg incremental-read analogue)."""
 
+import os
+import tempfile
+
 import pandas as pd
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from icdc_dataloader_spark.plans.lake import LakeTable, bucket_expr
 from icdc_dataloader_spark.plans.merge import (
+    INTERNAL_COLS,
+    append_delta,
     changed_buckets,
     changes_between,
     compact,
+    resolve,
+    table_schema,
 )
 from icdc_dataloader_spark.repos import make_pipeline
 
@@ -221,3 +232,146 @@ def test_feed_across_type_widen(spark, tmp_path):
         .select("repo", "change_type", "stars").collect()
     }
     assert rows0 == {"rA": ("insert", 2.5), "rB": ("insert", 9.0)}
+
+
+# ---------------------------------------------------------------------------
+# Property: the one-pass feed equals a diff of the two resolved snapshots
+# ---------------------------------------------------------------------------
+
+FEED_KEYS = ["k", "p"]
+FEED_BUCKETS = 8
+FEED_SCHEMA = "k string, p string, v string, tb string, _seq long, _op string"
+GC_ALL = 10**6
+
+feed_events = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", None]),
+        st.sampled_from(["x", None]),
+        st.integers(1, 8),
+        st.sampled_from([None, "", "t"]),
+        st.sampled_from(["upsert", "upsert", "delete"]),
+    ),
+    min_size=1,
+    max_size=8,
+)
+
+
+def _feed_payload():
+    from pyspark.sql import types as T
+
+    return T.StructType([
+        T.StructField(c, T.StringType()) for c in ("k", "p", "v", "tb")
+    ])
+
+
+@pytest.fixture(scope="module")
+def gone_key(spark):
+    """A key alone in its bucket, so deleting it and compacting with
+    tombstone GC empties that bucket to zero files."""
+    gen = [(k, p) for k in ("a", "b", None) for p in ("x", None)]
+    cands = [(f"gone{i}", "x") for i in range(32)]
+    bucket = {
+        (r["k"], r["p"]): r["b"]
+        for r in spark.createDataFrame(gen + cands, "k string, p string")
+        .select("k", "p", bucket_expr(FEED_KEYS, FEED_BUCKETS).alias("b"))
+        .collect()
+    }
+    used = {bucket[g] for g in gen}
+    key = next(c for c in cands if bucket[c] not in used)
+    return key, bucket[key]
+
+
+def _live(spark, lake, version):
+    """The reference: one resolve per snapshot, live rows by key."""
+    return {
+        (r["k"], r["p"]): r
+        for r in resolve(spark, lake, version=version)
+        .filter(F.col("_op") != "delete").collect()
+    }
+
+
+@settings(max_examples=6, deadline=None, database=None)
+@given(
+    batches=st.tuples(feed_events, feed_events, feed_events),
+    partial=st.booleans(),
+    pair=st.tuples(st.integers(0, 5), st.integers(0, 5)),
+)
+@example(
+    # seq ties decided by '' vs 't' in files that only v_from holds after
+    # the compaction: the old side must keep its tiebreakers
+    batches=([("a", "x", 1, "", "upsert"), ("a", "x", 1, "t", "delete"),
+              ("b", "x", 1, "t", "delete"), ("b", "x", 1, "", "upsert")],
+             [("a", None, 2, None, "upsert")],
+             [(None, "x", 3, "", "upsert")]),
+    partial=False,
+    pair=(0, 3),
+)
+def test_feed_equals_diff_of_resolved_snapshots(
+    spark, gone_key, batches, partial, pair
+):
+    """History: two batches, a compaction with tombstone GC that empties
+    ``gone``'s bucket, a column added, a third batch that recreates
+    ``gone``.  Draws carry seq ties broken by NULL vs '' tiebreakers, NULL
+    key components and delete->recreate.  Over every checked range the
+    feed must equal the diff of ``resolve(v_from)`` and ``resolve(v_to)``'s
+    live rows: same keys, change type by ``_seq``, payload at ``v_to``."""
+    from pyspark.sql import types as T
+
+    gone, gone_bucket = gone_key
+    seen, hist = set(), []
+    for evs in batches:
+        rows = []
+        for k, p, seq, tb, op in evs:
+            if (k, p, seq, tb) not in seen:
+                seen.add((k, p, seq, tb))
+                rows.append((k, p, f"v{len(seen)}", tb, seq, op))
+        hist.append(rows)
+    hist[0].append((*gone, "g", "t", 1, "upsert"))
+    hist[1].append((*gone, None, "t", 2, "delete"))
+    hist[2].append((*gone, "back", "t", 3, "upsert"))
+
+    with tempfile.TemporaryDirectory() as root:
+        lake = LakeTable.create(
+            os.path.join(root, "t"), table_schema(_feed_payload()),
+            FEED_KEYS, n_buckets=FEED_BUCKETS, tiebreakers=["tb"],
+        )
+        for i in (0, 1):
+            append_delta(spark, lake, spark.createDataFrame(hist[i], FEED_SCHEMA),
+                         batch_id=f"b{i}", pre_dedup=False)
+        compact(spark, lake, drop_tombstones_below_seq=GC_ALL,
+                buckets=[gone_bucket] if partial else None)
+        assert not [f for f in lake.snapshot()["files"]
+                    if f["bucket"] == gone_bucket]
+        lake.evolve_schema(
+            table_schema(_feed_payload().add("n", T.LongType()))
+        )
+        append_delta(
+            spark, lake,
+            spark.createDataFrame([(*r[:4], 7 * r[4], *r[4:]) for r in hist[2]],
+                                  FEED_SCHEMA.replace(", _seq", ", n long, _seq")),
+            batch_id="b2", pre_dedup=False,
+        )
+        assert lake.latest_version() == 5
+        v_from, v_to = sorted(pair)
+        for lo, hi in {(1, 3), (2, 5), (v_from, v_to)}:
+            if lo == hi:
+                continue
+            payload = [f.name for f in lake.schema(hi).fields
+                       if f.name not in INTERNAL_COLS + FEED_KEYS]
+            old, new = _live(spark, lake, lo), _live(spark, lake, hi)
+            want = {}
+            for key in old.keys() | new.keys():
+                o, n = old.get(key), new.get(key)
+                if n is None:
+                    want[key] = ("delete", (None,) * len(payload))
+                elif o is None or o["_seq"] != n["_seq"]:
+                    want[key] = ("update" if o else "insert",
+                                 tuple(n[c] for c in payload))
+            feed = changes_between(spark, lake, lo, hi)
+            assert feed.columns == FEED_KEYS + ["change_type"] + payload
+            rows = feed.collect()
+            got = {(r["k"], r["p"]): (r["change_type"],
+                                      tuple(r[c] for c in payload))
+                   for r in rows}
+            assert len(got) == len(rows), (lo, hi)
+            assert got == want, (lo, hi)

@@ -3,7 +3,8 @@
 The order is ``lww_order_key``: ``(_seq, *tiebreakers)`` compared by each
 column's own type, NULL lowest.  Generated batches carry ``_seq`` ties,
 NULL and ``''`` string tiebreakers and a LongType tiebreaker (9 vs 10:
-numeric, not text order).  The winner must be the same under ``lww_dedup``
+numeric, not text order; 2^53 vs 2^53+1 next to a NULL: exact, not
+float64).  The winner must be the same under ``lww_dedup``
 (agg, salted, window), ``read_state`` after a MoR append and after
 ``compact``, the COW ``merge_into`` and the change feed's pandas fold; in
 the repos table's domain it must also match the independent oracle.
@@ -14,7 +15,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from icdc_dataloader_spark import oracle
@@ -35,7 +36,7 @@ events = st.lists(
         st.sampled_from(["a", "b", None]),
         st.integers(1, 3),
         st.sampled_from([None, "", "x"]),
-        st.sampled_from([None, 9, 10]),
+        st.sampled_from([None, 9, 10, 2**53, 2**53 + 1]),
         st.sampled_from(["upsert", "delete"]),
     ),
     min_size=1,
@@ -87,6 +88,12 @@ def _v_by_key(rows):
 
 @PROPS
 @given(raw=events)
+@example(raw=[
+    # a seq tie decided by 2^53+1 vs 2^53, in a file whose tb_l holds a NULL
+    ("a", 1, "x", 2**53 + 1, "upsert"),
+    ("a", 1, "x", 2**53, "delete"),
+    ("a", 1, "x", None, "upsert"),
+])
 def test_every_lww_path_picks_the_same_winner(spark, raw):
     rows = _distinct_rows(raw)
     winners = {}

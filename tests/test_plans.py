@@ -135,39 +135,55 @@ REPOS_SCHEMA = (
     "repo string, path string, commit string, lang string, content string,"
     " content_sha256 string, _seq long, _op string"
 )
+# one key upserted, deleted and recreated
+MOR_ROWS = [("r1", "p1", "c1", "py", "x", None, 1, "upsert"),
+            ("r1", "p1", None, None, None, None, 2, "delete"),
+            ("r1", "p1", "c3", "py", "y", None, 3, "upsert")]
 
 
 def _payload_exchanges(plan: str) -> int:
     return plan.count("Exchange ")
 
 
+def _feed_range(spark, tmp_path, b):
+    """A MoR table and a version range whose changed buckets hold files of
+    all three kinds: only in v_from, in both, and only in v_to."""
+    from icdc_dataloader_spark.plans.merge import append_delta, compact
+    from icdc_dataloader_spark.repos import create_repos_table
+
+    lake = create_repos_table(str(tmp_path / "feed"), n_buckets=4)
+    wide = b.unionByName(b.withColumn("repo", F.lit("r2")))
+    append_delta(spark, lake, wide, batch_id="f1", pre_dedup=False)
+    v_from = lake.latest_version()
+    append_delta(spark, lake, wide.withColumn("_seq", F.col("_seq") + 10),
+                 batch_id="f2", pre_dedup=False)
+    buckets = sorted({f["bucket"] for f in lake.snapshot()["files"]})
+    assert len(buckets) > 1
+    compact(spark, lake, buckets=buckets[:1])
+    return lake, v_from
+
+
 def test_resolve_users_plan_one_payload_exchange(spark, tmp_path):
-    """read_state, each side of changes_between, compact and the COW
-    merge_into all run the one resolve kernel: the payload moves once
-    (repartition by _bucket) and is never joined — the tombstone
-    watermark is a window over (_bucket, keys), not a join."""
+    """read_state, changes_between, compact and the COW merge_into all run
+    the one resolve kernel: the payload moves once (repartition by
+    _bucket) and is never joined.  The change feed takes both snapshots'
+    winners as aggregates of that one grouping, so its plan has no window
+    either."""
     from icdc_dataloader_spark.plans.merge import (
-        append_delta, compact, merge_into, read_state, resolve,
+        append_delta, changes_between, compact, merge_into, read_state,
     )
     from icdc_dataloader_spark.repos import create_repos_table
 
-    b = spark.createDataFrame(
-        [("r1", "p1", "c1", "py", "x", None, 1, "upsert"),
-         ("r1", "p1", None, None, None, None, 2, "delete"),
-         ("r1", "p1", "c3", "py", "y", None, 3, "upsert")],
-        REPOS_SCHEMA,
-    )
+    b = spark.createDataFrame(MOR_ROWS, REPOS_SCHEMA)
     lake = create_repos_table(str(tmp_path / "mor"), n_buckets=4)
     append_delta(spark, lake, b, batch_id="b1")
-    v = lake.latest_version()
-    bks = [0, 1, 2, 3]
+    feed, v_from = _feed_range(spark, tmp_path, b)
     plans = {
         "read_state": _plan(read_state(spark, lake)),
-        # the two sides changes_between diffs
-        "changes_old": _plan(resolve(spark, lake, version=v, buckets=bks,
-                                     project=["repo", "path", "_seq"])),
-        "changes_new": _plan(resolve(spark, lake, version=v, buckets=bks)),
+        "changes_between": _plan(changes_between(spark, feed, v_from)),
     }
+    assert "Window" not in plans["changes_between"]
+    assert plans["changes_between"].count("FileScan") == 3
 
     def capture(target, name):
         write = target.write_data_files
@@ -217,3 +233,25 @@ def test_cow_apply_batch_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("cow-apply-batch")
     assert res["metrics"]["rows_updated"] == 40
     assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_feed_poll_job_count(spark, tmp_path):
+    """One change-feed poll over a delta-bearing range, materialized by a
+    noop write, runs at most 2 Spark jobs: the one kernel shuffle, a
+    shuffle-map job plus a result job under AQE."""
+    from icdc_dataloader_spark.streaming.feed import ChangeFeedConsumer
+
+    b = spark.createDataFrame(MOR_ROWS, REPOS_SCHEMA)
+    lake, v_from = _feed_range(spark, tmp_path, b)
+    consumer = ChangeFeedConsumer(lake, str(tmp_path / "cursor"),
+                                  start_version=v_from)
+    sc = spark.sparkContext
+    sc.setJobGroup("feed-poll", "job count")
+    try:
+        inc = consumer.poll(spark)
+        inc["df"].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("feed-poll")
+    assert inc["df"].count() > 0
+    assert len(jobs) <= 2, sorted(jobs)
