@@ -77,6 +77,8 @@ class LakeTable:
         self._snapshot_cache: dict[int, dict] = {}
         self._files_cache: dict[int, list] = {}
         self._manifest_cache: dict[str, list] = {}
+        self._latest: int | None = None
+        self._layout_exprs: dict[tuple, object] = {}
 
     # -- creation / snapshot plumbing ---------------------------------------
 
@@ -121,15 +123,35 @@ class LakeTable:
         )
         return t
 
+    def _log_path(self, version: int) -> str:
+        return os.path.join(self.log_dir, f"v{version:012d}.json")
+
     def latest_version(self) -> int | None:
-        if not os.path.isdir(self.log_dir):
-            return None
-        versions = [
-            int(m.group(1))
-            for f in os.listdir(self.log_dir)
-            if (m := _LOG_RE.match(f))
-        ]
-        return max(versions) if versions else None
+        """Newest committed version, probed forward from the last one seen:
+        two ``stat`` calls per steady-state call instead of a listing of
+        ``_log``, which holds one JSON per commit ever made.  Versions are
+        dense (each commit links exactly ``prev + 1`` and vacuum keeps the
+        snapshot JSONs), so the first missing ``v{V+k}`` ends the probe.
+        A vanished ``v{V}`` means the log was replaced under this
+        instance: list it again and drop the version-keyed caches."""
+        v = self._latest
+        if v is None or not os.path.exists(self._log_path(v)):
+            self._snapshot_cache.clear()
+            self._files_cache.clear()
+            if not os.path.isdir(self.log_dir):
+                return None
+            versions = [
+                int(m.group(1))
+                for f in os.listdir(self.log_dir)
+                if (m := _LOG_RE.match(f))
+            ]
+            if not versions:
+                return None
+            v = max(versions)
+        while os.path.exists(self._log_path(v + 1)):
+            v += 1
+        self._latest = v
+        return v
 
     def _raw_snapshot(self, version: int | None = None) -> dict:
         v = self.latest_version() if version is None else version
@@ -137,7 +159,7 @@ class LakeTable:
             raise FileNotFoundError(f"no snapshots in {self.root}")
         cached = self._snapshot_cache.get(v)
         if cached is None:
-            with open(os.path.join(self.log_dir, f"v{v:012d}.json")) as fh:
+            with open(self._log_path(v)) as fh:
                 cached = json.load(fh)
             self._snapshot_cache[v] = cached
             # bound driver memory over 10^5-commit runs: only recent
@@ -276,7 +298,7 @@ class LakeTable:
 
     def _write_snapshot(self, version: int, snapshot: dict) -> None:
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
-        final = os.path.join(self.log_dir, f"v{version:012d}.json")
+        final = self._log_path(version)
         with open(tmp, "w") as fh:
             json.dump(snapshot, fh)
             fh.flush()
@@ -303,20 +325,35 @@ class LakeTable:
     # -- properties ----------------------------------------------------------
 
     def schema(self, version: int | None = None) -> T.StructType:
-        return T.StructType.fromJson(json.loads(self.snapshot(version)["schema"]))
+        return T.StructType.fromJson(
+            json.loads(self._raw_snapshot(version)["schema"])
+        )
 
     def key_cols(self) -> list[str]:
-        return self.snapshot()["key_cols"]
+        return self._raw_snapshot()["key_cols"]
 
     def n_buckets(self) -> int:
-        return self.snapshot()["n_buckets"]
+        return self._raw_snapshot()["n_buckets"]
 
     def bucket_cols(self) -> list[str]:
-        snap = self.snapshot()
+        snap = self._raw_snapshot()
         return snap.get("bucket_cols") or snap["key_cols"]
 
     def tiebreakers(self) -> list[str]:
-        return self.snapshot().get("tiebreakers", [])
+        return self._raw_snapshot().get("tiebreakers", [])
+
+    def layout_exprs(self, name: str, build):
+        """``build()``'s Column expressions over this table's bucket layout,
+        built once and reused by every batch: PySpark pays several py4j
+        round trips per expression node, which per batch would dominate a
+        tail commit's driver time.  Keyed by the bucket columns and count
+        too, so a root re-created with another layout under a live
+        instance rebuilds them."""
+        key = (name, tuple(self.bucket_cols()), self.n_buckets())
+        exprs = self._layout_exprs.get(key)
+        if exprs is None:
+            exprs = self._layout_exprs[key] = build()
+        return exprs
 
     def delta_files(self, version: int | None = None) -> list[dict]:
         return [
@@ -408,6 +445,9 @@ class LakeTable:
         from concurrent.futures import ThreadPoolExecutor
 
         schema_json = schema.json()
+        # footer_entry may be pickled to executors: it must not capture
+        # self, whose expression cache holds JVM references
+        root = self.root
         targets = []
         for dirpath, _dirs, fnames in os.walk(out_dir):
             m = re.search(r"_pb=(\d+)", dirpath)
@@ -454,7 +494,7 @@ class LakeTable:
                     "stats", full, exc_info=True,
                 )
             return {
-                "path": os.path.relpath(full, self.root),
+                "path": os.path.relpath(full, root),
                 "rows": md.num_rows,
                 "bucket": bucket,
                 "schema": schema_json,
@@ -708,16 +748,45 @@ def _json_safe(v):
     return v
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(t: T.DataType) -> str:
+    """``t`` as a SQL type.  Struct field names are quoted; an array's or
+    map's element nullability has no SQL spelling, so a cast or NULL of
+    such a type comes out with nullable elements."""
+    if isinstance(t, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_quote(f.name)}: {_sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in t.fields
+        ) + ">"
+    if isinstance(t, T.ArrayType):
+        return f"ARRAY<{_sql_type(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"MAP<{_sql_type(t.keyType)}, {_sql_type(t.valueType)}>"
+    return t.simpleString()
+
+
 def _align(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project/cast df to the target schema (schema-evolution reconciliation)."""
-    cols = []
-    have = {f.name: f.dataType for f in df.schema.fields}
+    """Project/cast df to the target schema (schema-evolution
+    reconciliation): a missing column becomes a typed NULL, a widened one
+    a cast.  ``df`` itself when it already matches, else one
+    ``selectExpr``: a Column per field costs 2-4 wrapped py4j calls, and
+    this runs for every staged batch, compaction and file group read."""
+    fields = df.schema.fields
+    if [(f.name, f.dataType) for f in fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
+    have = {f.name: f.dataType for f in fields}
+    exprs = []
     for f in target.fields:
-        if f.name in have:
-            if have[f.name] == f.dataType:
-                cols.append(F.col(f.name))
-            else:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        name = _quote(f.name)
+        if have.get(f.name) == f.dataType:
+            exprs.append(name)
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+            src = name if f.name in have else "NULL"
+            exprs.append(f"CAST({src} AS {_sql_type(f.dataType)}) AS {name}")
+    return df.selectExpr(*exprs)

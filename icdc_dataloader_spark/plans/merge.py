@@ -256,6 +256,16 @@ def read_state(spark: SparkSession, lake: LakeTable, version: int | None = None)
     return df.filter(F.col("_op") != OP_DELETE).drop(*[c for c in INTERNAL_COLS if c in df.columns])
 
 
+def _staging(lake: LakeTable) -> dict:
+    """A ``_seq``-stamped batch's bucket and created/updated lineage
+    columns, for one ``withColumns`` (see :meth:`LakeTable.layout_exprs`)."""
+    return lake.layout_exprs("staging", lambda: {
+        "_bucket": bucket_expr(lake.bucket_cols(), lake.n_buckets()),
+        "_created_seq": F.col("_seq"),
+        "_updated_seq": F.col("_seq"),
+    })
+
+
 def _bucket_lineage(batch: DataFrame) -> dict:
     """Per touched bucket: min/max ``_seq`` and row count of the batch
     (one small aggregate job; its keys are the touched buckets)."""
@@ -302,15 +312,9 @@ def merge_into(
 
     key_cols = lake.key_cols()
     schema = lake.schema()
-    batch = batch_df.withColumn(
-        "_bucket", bucket_expr(lake.bucket_cols(), lake.n_buckets())
-    )
-    batch = batch.withColumn("_created_seq", F.col("_seq")).withColumn(
-        "_updated_seq", F.col("_seq")
-    )
     # not persisted: under AQE a cached input costs its own job, more than
     # re-running the staging projection in the rewrite
-    batch = _align(batch, schema)
+    batch = _align(batch_df.withColumns(_staging(lake)), schema)
     lineage = _bucket_lineage(batch)
     touched = sorted(int(b) for b in lineage)
     snap = lake.snapshot()
@@ -514,25 +518,24 @@ def append_delta(
     schema = lake.schema()
     tiebreakers = lake.tiebreakers()
 
-    batch = batch_df.withColumn("_bucket", bucket_expr(lake.bucket_cols(), n_buckets))
-    batch = batch.withColumn("_created_seq", F.col("_seq")).withColumn(
-        "_updated_seq", F.col("_seq")
-    )
-    batch = _align(batch, schema)
+    batch = _align(batch_df.withColumns(_staging(lake)), schema)
     if pre_dedup:
         batch = lww_dedup(
             batch, key_cols, seq_col="_seq", tiebreakers=tiebreakers,
             strategy="salted",
         )
 
-    # ONE Spark job on the common path: the write itself.  NEW-op presence
-    # is observed during that job; per-bucket lineage comes from the
-    # written files' parquet footers (no extra aggregation jobs).
+    # The common path's only Spark action is the write: with ``colocate``
+    # AQE runs it as a shuffle-map job plus a result job.  NEW-op presence
+    # is observed during the write; per-bucket lineage comes from the
+    # written files' parquet footers (no extra aggregation jobs).  The
+    # staging columns above and this aggregate are built once per table.
     obs = Observation()
-    batch = batch.observe(
-        obs,
-        F.max(F.when(F.col("_op") == OP_NEW, 1).otherwise(0)).alias("has_new"),
-    )
+    batch = batch.observe(obs, lake.layout_exprs(
+        "has_new",
+        lambda: F.max(F.when(F.col("_op") == OP_NEW, 1).otherwise(0))
+        .alias("has_new"),
+    ))
 
     # ``colocate``: shuffle the batch so each bucket is one file (read- and
     # footer-friendly) vs write straight from the input splits (zero

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import logging
 import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,6 +185,8 @@ class CDCPipeline:
         # Direct out-of-order callers keep the safe default (no GC).
         self.assume_ordered = assume_ordered
         self._batches_since_compact = 0
+        # _annotate_fast's expressions per input column set
+        self._fast_exprs: dict[tuple, dict] = {}
         # min event seq of every binlog batch not yet applied, maintained by
         # run(); bounds the tombstone-GC watermark exactly for in-flight data
         self._pending_mins: dict[str, int] = {}
@@ -238,39 +241,54 @@ class CDCPipeline:
         return key_null
 
     def _annotate_fast(self, batch_df: DataFrame) -> DataFrame:
-        """Hot-path variant of :meth:`_annotate` (round 6, guide §4 spirit):
-        the apply path only needs a PER-ROW BOOLEAN (quarantine or not) —
-        the counts and the min quarantined seq are aggregates of it — yet
-        ``_errs`` built a 4-field struct per check and filtered the array
-        through an interpreted higher-order lambda for every row.  Here the
-        same check CONDITIONS (one source of truth:
-        validation_check_pairs) are OR-ed into one codegen'd boolean
-        ``_bad``; the error structs are only materialized on the rare
-        quarantine path, which still calls :meth:`_annotate`.  A condition
-        evaluating NULL means "no violation" (matches F.when's
-        false-on-NULL in the _errs form), hence the coalesce."""
-        bad = F.lit(False)
-        if self.model is not None:
-            for cond, _err in validation_check_pairs(
-                batch_df, self.node_type, self.model
-            ):
-                bad = bad | cond
-        upsert_bad = F.coalesce(bad, F.lit(False))
-        is_delete = F.col(self.op_col) == OP_DELETE
-        return (
-            batch_df.withColumn(
-                "_bad",
-                F.when(is_delete, self._key_null()).otherwise(upsert_bad),
-            )
-            .withColumn(
-                "content_sha256",
-                F.when(
+        """Hot-path variant of :meth:`_annotate`: the apply path only needs
+        a PER-ROW BOOLEAN (quarantine or not) — the counts and the min
+        quarantined seq are aggregates of it.  The same check CONDITIONS
+        (one source of truth: validation_check_pairs) are OR-ed into one
+        codegen'd boolean ``_bad``; the error structs are only built on the
+        rare quarantine path, which still calls :meth:`_annotate`.  A
+        condition evaluating NULL means "no violation" (matches F.when's
+        false-on-NULL in the _errs form), hence the coalesce.
+
+        The ``_bad``, ``content_sha256`` and ``_bucket`` expressions depend
+        only on which columns the batch has, so they are built once per
+        column set and applied in one ``withColumns``.  Building them costs
+        about 1,500 py4j round trips (PySpark wraps every Column call with
+        call-site capture), more driver time than the rest of a tail
+        commit's planning."""
+        cols = tuple(batch_df.columns)
+        exprs = self._fast_exprs.get(cols)
+        if exprs is None:
+            bad = F.lit(False)
+            if self.model is not None:
+                for cond, _err in validation_check_pairs(
+                    batch_df, self.node_type, self.model
+                ):
+                    bad = bad | cond
+            is_delete = F.col(self.op_col) == OP_DELETE
+            exprs = self._fast_exprs[cols] = {
+                "_bad": F.when(is_delete, self._key_null()).otherwise(
+                    F.coalesce(bad, F.lit(False))
+                ),
+                "content_sha256": F.when(
                     ~is_delete,
                     F.sha2(F.coalesce(F.col(self.content_col), F.lit("")), 256),
                 ),
-            )
-            .withColumn("_bucket", bucket_expr(self.key_cols, self.lake.n_buckets()))
-        )
+                "_bucket": bucket_expr(self.key_cols, self.lake.n_buckets()),
+            }
+        return batch_df.withColumns(exprs)
+
+    @cached_property
+    def _quarantine_exprs(self) -> tuple[list[F.Column], F.Column]:
+        """The quarantine observation's aggregates and the keep-filter over
+        ``_bad``, built once per pipeline (see :meth:`_annotate_fast`)."""
+        bad = F.col("_bad")
+        return [
+            F.sum(F.when(bad, 1).otherwise(0)).alias("n_bad"),
+            # min seq over quarantined rows: a GC-watermark hold (recorded
+            # in the ledger) — free, same observation the write job fills
+            F.min(F.when(bad, F.col(self.seq_col))).alias("min_bad_seq"),
+        ], ~bad
 
     def _salt_from_rows(
         self, rows_by_bucket: dict
@@ -351,18 +369,14 @@ class CDCPipeline:
             else None
         )
 
-        annotated = self._annotate_fast(batch_df)
-        bad = F.col("_bad")
+        aggs, keep = self._quarantine_exprs
         obs = Observation()
-        annotated = annotated.observe(
-            obs,
-            F.sum(F.when(bad, 1).otherwise(0)).alias("n_bad"),
-            # min seq over quarantined rows: a GC-watermark hold (recorded
-            # in the ledger) — free, same observation the write job fills
-            F.min(F.when(bad, F.col(self.seq_col))).alias("min_bad_seq"),
+        valid = (
+            self._annotate_fast(batch_df)
+            .observe(obs, *aggs)
+            .filter(keep)
+            .drop("_bad")
         )
-
-        valid = annotated.filter(~bad).drop("_bad")
         if spc:
             # per-source-partition max seq over APPLIED rows only (tiny
             # agg: one row per partition).  Quarantined rows must not
@@ -391,9 +405,7 @@ class CDCPipeline:
                 tiebreakers=self.lake.tiebreakers(),
                 strategy="salted",
             )
-        staged = valid.withColumnRenamed(self.seq_col, "_seq").withColumnRenamed(
-            self.op_col, "_op"
-        )
+        staged = valid.withColumnsRenamed({self.seq_col: "_seq", self.op_col: "_op"})
         merge_err_sink = None
         if self.error_dir:
             merge_out = os.path.join(self.error_dir, f"batch={bid}-merge")
@@ -401,8 +413,8 @@ class CDCPipeline:
         from .. import timers
 
         if self.strategy == "mor":
-            # single-job fast path: append_delta's write fills the
-            # quarantine observation; lineage comes from parquet footers
+            # the write is the only action (<= 2 jobs under AQE): it fills
+            # the quarantine observation; lineage comes from parquet footers
             res = append_delta(
                 self.spark,
                 self.lake,

@@ -126,6 +126,76 @@ def test_fresh_instance_reads_manifest_snapshots(tmp_path):
     assert [f["bucket"] for f in lake2.delta_files()].count(0) == 5
 
 
+def _listed_latest(lake):
+    """The full-listing reference for latest_version()."""
+    import re
+
+    vs = [int(m.group(1)) for f in os.listdir(lake.log_dir)
+          if (m := re.match(r"^v(\d{12})\.json$", f))]
+    return max(vs) if vs else None
+
+
+def test_latest_version_probes_without_listing(tmp_path, monkeypatch):
+    """A writer and a feed consumer on one root commit in turn: both
+    instances agree with a full listing of _log after every commit, and
+    once warm neither lists the directory again."""
+    from icdc_dataloader_spark.plans import lake as lake_mod
+
+    writer = _mk_lake(tmp_path)
+    consumer = LakeTable(writer.root)
+    assert writer.latest_version() == consumer.latest_version() == 0
+    listings = []
+    real_listdir = os.listdir
+
+    def counting_listdir(path):
+        listings.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(lake_mod.os, "listdir", counting_listdir)
+    for i in range(1, 9):
+        by = writer if i % 2 else consumer
+        by.commit(_fake_entries(by, i), by.snapshot()["files"],
+                  operation="append-delta", batch_id=i)
+        if i % 3 == 0:  # a consumer may lag several commits behind
+            continue
+        monkeypatch.setattr(lake_mod.os, "listdir", real_listdir)
+        expected = _listed_latest(writer)
+        monkeypatch.setattr(lake_mod.os, "listdir", counting_listdir)
+        assert writer.latest_version() == consumer.latest_version() == expected
+    assert expected == 8
+    assert listings == []
+    assert len(consumer.snapshot()["files"]) == 8 * 4
+    assert consumer.is_batch_committed(7)
+
+
+def test_latest_version_after_root_recreated(tmp_path):
+    """A root wiped and re-created under a live instance falls back to
+    the listing, and the instance's cached snapshots of the old log are
+    not served for the new one."""
+    import shutil
+
+    lake = _mk_lake(tmp_path)
+    for i in range(1, 6):
+        lake.commit(_fake_entries(lake, i), lake.snapshot()["files"],
+                    operation="append-delta", batch_id=i)
+    assert lake.latest_version() == 5 and lake.n_buckets() == 4
+    shutil.rmtree(lake.root)
+    assert lake.latest_version() is None
+    fresh = _mk_lake(tmp_path, n_buckets=2)
+    fresh.commit(_fake_entries(fresh, 1, n_buckets=2), [],
+                 operation="append-delta", batch_id="only")
+    assert lake.latest_version() == _listed_latest(fresh) == 1
+    assert lake.n_buckets() == 2
+    assert lake.is_batch_committed("only") and not lake.is_batch_committed(3)
+    # re-created and grown past the old head: the probe still ends at
+    # the listing's answer
+    for i in range(2, 9):
+        fresh.commit(_fake_entries(fresh, i, n_buckets=2),
+                     fresh.snapshot()["files"], operation="append-delta",
+                     batch_id=i)
+    assert lake.latest_version() == _listed_latest(fresh) == 8
+
+
 def test_carried_subset_rewrites_only_touched_buckets(tmp_path):
     """COW merge shape: carried files omit touched buckets — untouched
     buckets must reuse their manifest lists verbatim."""

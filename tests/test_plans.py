@@ -235,6 +235,37 @@ def test_cow_apply_batch_job_count(spark, tmp_path):
     assert len(jobs) <= 4, sorted(jobs)
 
 
+def test_mor_apply_batch_job_count(spark, tmp_path):
+    """A common-path MoR batch (no quarantine, no NEW op, no compaction)
+    runs at most 2 Spark jobs: the delta write, a shuffle-map job plus a
+    result job under AQE.  The quarantine and NEW-op observations ride
+    that write; lineage comes from the parquet footers."""
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    pipe = make_pipeline(spark, str(tmp_path / "p"), n_buckets=4,
+                         strategy="mor", compact_every=100)
+
+    def batch(seq0):
+        return spark.createDataFrame(
+            [(f"r{i % 5}", f"p{i}", f"c{seq0 + i}", "python", f"body {i}",
+              seq0 + i, "upsert") for i in range(40)],
+            "repo string, path string, commit string, lang string,"
+            " content string, seq long, op string",
+        )
+
+    pipe.apply_batch(batch(0), "b0")  # first batch: warm the plan
+    sc = spark.sparkContext
+    sc.setJobGroup("mor-apply-batch", "job count")
+    try:
+        res = pipe.apply_batch(batch(100), "b1")
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("mor-apply-batch")
+    assert res["metrics"]["rows_appended"] == 40
+    assert res["metrics"]["rows_quarantined"] == 0
+    assert len(jobs) <= 2, sorted(jobs)
+
+
 def test_feed_poll_job_count(spark, tmp_path):
     """One change-feed poll over a delta-bearing range, materialized by a
     noop write, runs at most 2 Spark jobs: the one kernel shuffle, a
