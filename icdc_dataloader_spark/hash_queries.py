@@ -32,7 +32,7 @@ from .operators.similarity import wta_pairs
 _TOKS = (
     "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')"
 )
-# UNFILTERED split — mirrors dedup._shingles, which does not drop empties
+# UNFILTERED split — mirrors dedup._words, which does not drop empties
 _WORDS_RAW = "string_split_regex(lower(trim(text)), '\\s+')"
 
 UUID_DOMAIN = "repos.example.org"

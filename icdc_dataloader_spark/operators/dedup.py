@@ -205,14 +205,30 @@ def exact_dedup(
     )
 
 
-def _shingles(text_col: Column, k: int = 5) -> Column:
-    """Word k-shingles as an array<string> (lower-cased, whitespace-split)."""
-    words = F.split(F.lower(F.trim(text_col)), r"\s+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    return F.when(n >= k, F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, k), " "))).otherwise(
-        F.array(F.array_join(words, " "))
-    )
+def _words(text_col: Column) -> Column:
+    """Lower-cased, whitespace-split word array.  Project it once, in its
+    own ``select``, and shingle that column: the split inlined into a
+    shingle lambda is re-run for every shingle (O(words²) per document)."""
+    return F.split(F.lower(F.trim(text_col)), r"\s+")
+
+
+def _shingle_starts(words: Column, k: int) -> Column:
+    """0-based start of each word k-shingle of a :func:`_words` column; a
+    document shorter than k words (or NULL) has one, at 0."""
+    return F.sequence(F.lit(0), F.greatest(F.size(words) - F.lit(k), F.lit(0)))
+
+
+def _shingle_at(words: Column, start: Column, k: int) -> Column:
+    """The k-shingle at ``start``; a document shorter than k words is one
+    shingle, its whole (normalized) text, and a NULL one a NULL shingle."""
+    return F.when(
+        F.size(words) >= k, F.array_join(F.slice(words, start + 1, k), " ")
+    ).otherwise(F.array_join(words, " "))
+
+
+def _shingles(words: Column, k: int = 5) -> Column:
+    """Word k-shingles of a :func:`_words` column as an array<string>."""
+    return F.transform(_shingle_starts(words, k), lambda i: _shingle_at(words, i, k))
 
 
 def minhash_signatures(
@@ -260,10 +276,14 @@ def minhash_signatures(
     # array, member arithmetic unchanged (measured ~6x on the portable
     # leg, see OPTIMIZATION_r06.md).  A NULL shingle (NULL text) yields a
     # NULL-sig row in both shapes: explode keeps NULL *elements* (only
-    # NULL/empty arrays drop rows, and _shingles never returns those).
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(_shingles(F.col(text_col), shingle_k)).alias("_s"),
+    # NULL/empty arrays drop rows, and a document always has one shingle
+    # start).  The word array is projected once and the shingle starts
+    # exploded, so slice/array_join run in codegen, not in a lambda.
+    w = F.col("_w")
+    sh = (
+        df.select(F.col(id_col).alias("id"), _words(F.col(text_col)).alias("_w"))
+        .select("id", "_w", F.explode(_shingle_starts(w, shingle_k)).alias("_i"))
+        .select("id", _shingle_at(w, F.col("_i"), shingle_k).alias("_s"))
     )
     if hash_mode == "portable":
         # Kirsch-Mitzenmacher basis from ONE md5 per shingle; each family
@@ -500,10 +520,12 @@ def ngram_jaccard_pairs(
     but is released by the ContextCleaner once the result is dropped.
     Output: (id_a, id_b, jaccard).
     """
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(_shingles(F.col(text_col), n))).alias("gram"),
-    ).localCheckpoint(eager=False)
+    grams = (
+        df.select(F.col(id_col).alias("id"), _words(F.col(text_col)).alias("_w"))
+        .select("id", F.explode(F.array_distinct(_shingles(F.col("_w"), n)))
+                .alias("gram"))
+        .localCheckpoint(eager=False)
+    )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
     freq = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("df_"))
     grams_capped = grams.join(

@@ -483,6 +483,39 @@ def _distinct_partition_salts(
     return vals
 
 
+def _one_split_scan(df: DataFrame) -> bool:
+    """Whether ``df`` plans to one input partition with no exchange: its
+    only leaf is a file scan listing one file no larger than
+    min(``spark.sql.files.maxPartitionBytes``,
+    ``spark.sql.files.openCostInBytes``), which Spark never splits.  Such a
+    batch is written by one task, so it lands at most one file per bucket
+    without a shuffle.
+
+    Reads the planned scan's file listing only: building the scan's RDD
+    would broadcast the Hadoop conf, and ``DataFrame.rdd`` would run AQE
+    stages.  Under AQE any exchange wraps the plan in an adaptive node,
+    which is then its only leaf; without AQE the exchange pattern bit
+    catches it.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    if leaves.size() != 1:
+        return False
+    scan = leaves.head()
+    if scan.getClass().getSimpleName() != "FileSourceScanExec":
+        return False
+    jvm = df.sparkSession._jvm
+    if plan.containsPattern(
+        jvm.org.apache.spark.sql.catalyst.trees.TreePattern.EXCHANGE()
+    ):
+        return False
+    listing = scan.selectedPartitions()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return listing.totalNumberOfFiles() == 1 and listing.totalFileSize() <= min(
+        conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    )
+
+
 def append_delta(
     spark: SparkSession,
     lake: LakeTable,
@@ -504,6 +537,11 @@ def append_delta(
     - ``pre_dedup``: explicit key-salted two-phase LWW inside the batch
       before writing (bounds delta size by the batch's key count — the hot
       path of the north rule's salting mechanism).
+    - ``colocate``: at most one delta file per bucket per batch.  A batch
+      that plans to one input split (:func:`_one_split_scan`, e.g. one
+      small binlog file) is written straight from its scan, since its one
+      write task already lands one file per bucket; any other batch is
+      shuffled by ``_bucket`` first.
     - NEW_MODE events require apply-time liveness: if (and only if) the
       batch contains op='new', the current state of the touched buckets is
       resolved (a read, not a rewrite) and every key whose batch-winner is
@@ -525,11 +563,12 @@ def append_delta(
             strategy="salted",
         )
 
-    # The common path's only Spark action is the write: with ``colocate``
-    # AQE runs it as a shuffle-map job plus a result job.  NEW-op presence
-    # is observed during the write; per-bucket lineage comes from the
-    # written files' parquet footers (no extra aggregation jobs).  The
-    # staging columns above and this aggregate are built once per table.
+    # The common path's only Spark action is the write: one job for a
+    # one-split batch, else a shuffle-map job plus a result job under AQE.
+    # NEW-op presence is observed during the write; per-bucket lineage
+    # comes from the written files' parquet footers (no extra aggregation
+    # jobs).  The staging columns above and this aggregate are built once
+    # per table.
     obs = Observation()
     batch = batch.observe(obs, lake.layout_exprs(
         "has_new",
@@ -537,9 +576,11 @@ def append_delta(
         .alias("has_new"),
     ))
 
-    # ``colocate``: shuffle the batch so each bucket is one file (read- and
-    # footer-friendly) vs write straight from the input splits (zero
-    # shuffle, one file per task×bucket — compaction folds them).
+    # ``colocate``: at most one file per bucket (read- and
+    # footer-friendly).  A one-split batch already has that from its one
+    # write task; otherwise shuffle it by bucket.  Without it, write
+    # straight from the input splits (zero shuffle, one file per
+    # task×bucket — compaction folds them).
     # ``colocate_salt`` > 1 splits each bucket's write across that many
     # tasks (hot-BUCKET skew: a key carrying p% of the batch makes its
     # bucket's single write task the stage straggler; salting bounds the
@@ -603,6 +644,8 @@ def append_delta(
             out = batch.repartition(
                 n_part, F.col("_bucket").cast("long"), salt
             )
+        elif _one_split_scan(batch):
+            out = batch
         else:
             out = batch.repartition(n_buckets, "_bucket")
     else:

@@ -413,8 +413,9 @@ class CDCPipeline:
         from .. import timers
 
         if self.strategy == "mor":
-            # the write is the only action (<= 2 jobs under AQE): it fills
-            # the quarantine observation; lineage comes from parquet footers
+            # the write is the only action (one job for a one-split batch,
+            # else <= 2 under AQE): it fills the quarantine observation;
+            # lineage comes from parquet footers
             res = append_delta(
                 self.spark,
                 self.lake,
@@ -562,14 +563,24 @@ class CDCPipeline:
         directory layout (driver-side metadata, no job).  Hive partition
         dirs percent-escape special chars (':', ' ', '%') — ids are
         unquoted so callers compare real values.  Empty dict when the
-        source is not partitioned by ``batch_col``.  Single home for this
-        parsing: the drain listing and the watermark footer pass must
-        never disagree on which batches exist."""
+        source is not partitioned by ``batch_col`` or its files cannot be
+        listed.  :meth:`run` lists once and hands the result to both the
+        drain listing and the watermark footer pass, so they never
+        disagree on which batches exist (and ``inputFiles()``, about two
+        py4j round trips per file, is paid once per drain)."""
         import re as _re
         from urllib.parse import unquote
 
+        try:
+            files = events.inputFiles()
+        except Exception:
+            log.warning(
+                "the binlog's input files could not be listed; falling back "
+                "to scans of the batch column", exc_info=True,
+            )
+            return {}
         by_bid: dict[str, list[str]] = {}
-        for f in events.inputFiles():
+        for f in files:
             m = _re.search(rf"/{_re.escape(batch_col)}=([^/]+)/", f)
             if m:
                 local = f[len("file://"):] if f.startswith("file://") else f
@@ -577,15 +588,14 @@ class CDCPipeline:
         return by_bid
 
     def _pending_min_seqs(self, events: DataFrame, batch_col: str,
-                          pending: list) -> dict:
-        """Min event seq per pending batch — from parquet footers when the
-        binlog is batch-partitioned (driver-side, no job), else one
-        column-pruned aggregation."""
+                          pending: list, by_bid: dict) -> dict:
+        """Min event seq per pending batch — from the parquet footers of
+        ``by_bid`` (:meth:`_partition_files`) when it lists every pending
+        batch (driver-side, no job), else one column-pruned aggregation."""
         try:
             import pyarrow.parquet as pq
             from concurrent.futures import ThreadPoolExecutor
 
-            by_bid = self._partition_files(events, batch_col)
             if set(map(str, pending)) <= set(by_bid):
 
                 def batch_min(bid):
@@ -629,29 +639,22 @@ class CDCPipeline:
 
     # -- full tail loop ---------------------------------------------------------
 
-    @classmethod
-    def _list_batch_ids(cls, events: DataFrame, batch_col: str) -> list:
+    @staticmethod
+    def _list_batch_ids(events: DataFrame, batch_col: str,
+                        by_bid: dict) -> list:
         """Pending batch ids, WITHOUT scanning the binlog when avoidable.
 
         A batch-partitioned binlog encodes the ids in its directory layout
-        (see :meth:`_partition_files`).  This (a) removes a full-binlog
-        scan per drain and (b) keeps the listing alive when one batch
-        contains a corrupt file: the poisoned batch then fails in apply
-        and is parked by the retry-TTL instead of killing the whole drain.
-        Non-partitioned sources fall back to a distinct scan.
+        (``by_bid``, see :meth:`_partition_files`).  This (a) removes a
+        full-binlog scan per drain and (b) keeps the listing alive when one
+        batch contains a corrupt file: the poisoned batch then fails in
+        apply and is parked by the retry-TTL instead of killing the whole
+        drain.  Non-partitioned sources fall back to a distinct scan.
         """
-        try:
-            seen = set(cls._partition_files(events, batch_col))
-            if seen:
-                return sorted(
-                    seen,
-                    key=lambda v: (0, int(v)) if v.lstrip("-").isdigit() else (1, v),
-                )
-        except Exception:
-            log.warning(
-                "batch ids from the binlog's partition layout failed; "
-                "falling back to a distinct scan",
-                exc_info=True,
+        if by_bid:
+            return sorted(
+                by_bid,
+                key=lambda v: (0, int(v)) if v.lstrip("-").isdigit() else (1, v),
             )
         return [
             r[0]
@@ -680,7 +683,8 @@ class CDCPipeline:
         then PARKED so it never blocks the drain; parked ids are returned
         under 'quarantined'.
         """
-        batch_ids = self._list_batch_ids(events, batch_col)
+        by_bid = self._partition_files(events, batch_col)
+        batch_ids = self._list_batch_ids(events, batch_col, by_bid)
         committed = self.lake.committed_batch_ids()
         pending_all = [b for b in batch_ids if str(b) not in committed]
         # min seq of EVERY unapplied batch (including ones beyond
@@ -688,7 +692,7 @@ class CDCPipeline:
         # event still waiting in the binlog, regardless of arrival order
         if self.late_horizon is not None and pending_all:
             self._pending_mins = self._pending_min_seqs(
-                events, batch_col, pending_all
+                events, batch_col, pending_all, by_bid
             )
         applied = []
         quarantined = []

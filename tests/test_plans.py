@@ -286,3 +286,169 @@ def test_feed_poll_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("feed-poll")
     assert inc["df"].count() > 0
     assert len(jobs) <= 2, sorted(jobs)
+
+
+def _binlog(spark, tmp_path, name, files_per_batch, n_batches=3):
+    """A batch-partitioned binlog of ``n_batches`` 200-event batches over
+    60 keys (upserts and deletes, keys repeating across batches), each
+    batch stored as ``files_per_batch`` Parquet files."""
+    from icdc_dataloader_spark.sources.gen import gen_events_pandas
+
+    pdf = gen_events_pandas(n_events=200 * n_batches, n_repos=6, n_paths=10,
+                            n_batches=n_batches, p_delete=0.1, p_new=0.0,
+                            shuffle_arrival=False)
+    path = str(tmp_path / name)
+    events = spark.createDataFrame(pdf)
+    for bid in sorted(pdf["batch_id"].unique()):
+        events.filter(F.col("batch_id") == int(bid)).repartition(
+            files_per_batch).write.mode("append").partitionBy(
+            "batch_id").parquet(path)
+    return path
+
+
+def _drain_one(spark, pipe, path, group):
+    """Drain the next pending batch of the binlog at ``path`` under job
+    group ``group``; returns (applied record, job ids)."""
+    binlog = spark.read.parquet(path)  # schema inference runs its own job
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one drained batch")
+    try:
+        res = pipe.run(binlog, max_batches=1)
+    finally:
+        sc.setJobGroup("", "")
+    return res["applied"][0], sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _files_per_bucket(lake, version):
+    counts: dict[int, int] = {}
+    for f in lake.snapshot(version)["files"]:
+        if f["path"].startswith(f"data/v{version}/"):
+            counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
+    return counts
+
+
+def test_mor_one_file_batch_is_one_job(spark, tmp_path):
+    """A batch stored as one small Parquet file is one input split: its
+    delta is written straight from the scan, one Spark job, and still one
+    file per touched bucket."""
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    path = _binlog(spark, tmp_path, "binlog", files_per_batch=1)
+    pipe = make_pipeline(spark, str(tmp_path / "p"), n_buckets=4,
+                         strategy="mor", compact_every=100)
+    _drain_one(spark, pipe, path, "mor-one-file-warm")
+    applied, jobs = _drain_one(spark, pipe, path, "mor-one-file")
+    assert applied["metrics"]["rows_appended"] > 0
+    assert len(jobs) == 1, sorted(jobs)
+    per_bucket = _files_per_bucket(pipe.lake, applied["version"])
+    assert len(per_bucket) == 4 and set(per_bucket.values()) == {1}
+
+
+def test_mor_multi_file_batch_keeps_colocating_shuffle(spark, tmp_path):
+    """The same events stored as 3 files per batch are 3 splits: the write
+    keeps the shuffle by bucket, so each touched bucket still gets one
+    file, in at most 2 jobs."""
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    path = _binlog(spark, tmp_path, "binlog", files_per_batch=3)
+    pipe = make_pipeline(spark, str(tmp_path / "p"), n_buckets=4,
+                         strategy="mor", compact_every=100)
+    _drain_one(spark, pipe, path, "mor-three-files-warm")
+    applied, jobs = _drain_one(spark, pipe, path, "mor-three-files")
+    assert applied["metrics"]["rows_appended"] > 0
+    assert len(jobs) <= 2, sorted(jobs)
+    per_bucket = _files_per_bucket(pipe.lake, applied["version"])
+    assert len(per_bucket) == 4 and set(per_bucket.values()) == {1}
+
+
+def test_one_split_check_plans_only(spark, tmp_path):
+    """The one-split check accepts only an exchange-free plan over one
+    small file, and launches no Spark job deciding."""
+    from icdc_dataloader_spark.plans.merge import _one_split_scan
+
+    path = _binlog(spark, tmp_path, "binlog", files_per_batch=1, n_batches=1)
+    one = spark.read.parquet(path).filter(F.col("batch_id") == 0).drop(
+        "batch_id").withColumn("_bucket", F.lit(0))
+    three = spark.read.parquet(
+        _binlog(spark, tmp_path, "three", files_per_batch=3, n_batches=1))
+    local = spark.createDataFrame([("r", "p", 1)], "repo string, path string,"
+                                  " seq long")
+    deduped = lww_dedup(one, ["repo", "path"], seq_col="seq",
+                        strategy="salted")
+    sc = spark.sparkContext
+    sc.setJobGroup("one-split-check", "plan only")
+    try:
+        assert _one_split_scan(one)
+        assert not _one_split_scan(three)
+        assert not _one_split_scan(deduped)
+        assert not _one_split_scan(local)
+        # a file above the open cost may be split (filters below make new
+        # DataFrames: each plans once, under the conf of its first use)
+        spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+        try:
+            assert not _one_split_scan(one.filter(F.col("seq") >= 0))
+        finally:
+            spark.conf.unset("spark.sql.files.openCostInBytes")
+        # without AQE an exchange stays inline in the plan
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            assert _one_split_scan(one.filter(F.col("seq") >= 1))
+            assert not _one_split_scan(one.repartition(4, "_bucket"))
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("one-split-check") == []
+
+
+def test_direct_and_colocated_writes_same_state(spark, tmp_path):
+    """The same batches written straight from one-file scans and through
+    the colocating shuffle from 3-file scans resolve to the same state,
+    before and after compaction."""
+    from icdc_dataloader_spark.plans.merge import compact, read_state
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    def digest(lake):
+        return sorted(
+            tuple(r) for r in read_state(spark, lake).select(
+                "repo", "path", "commit", "content_sha256").collect()
+        )
+
+    lakes = []
+    for files in (1, 3):
+        pipe = make_pipeline(spark, str(tmp_path / f"p{files}"), n_buckets=4,
+                             strategy="mor", compact_every=100)
+        res = pipe.run(spark.read.parquet(
+            _binlog(spark, tmp_path, f"binlog{files}", files_per_batch=files)))
+        assert len(res["applied"]) == 3
+        lakes.append(pipe.lake)
+    direct, colocated = lakes
+    # one delta file per bucket per batch on both sides
+    assert len(direct.delta_files()) == len(colocated.delta_files())
+    assert digest(direct) == digest(colocated) != []
+    for lake in lakes:
+        compact(spark, lake)
+    assert digest(direct) == digest(colocated)
+
+
+def test_run_lists_binlog_files_once(spark, tmp_path, monkeypatch):
+    """One drain converts the binlog's input-file list once: the drain
+    listing and the watermark's footer pass share it."""
+    from icdc_dataloader_spark.repos import make_pipeline
+
+    binlog = spark.read.parquet(
+        _binlog(spark, tmp_path, "binlog", files_per_batch=1))
+    calls = []
+    real = type(binlog).inputFiles
+
+    def spy(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(type(binlog), "inputFiles", spy)
+    pipe = make_pipeline(spark, str(tmp_path / "p"), n_buckets=2,
+                         strategy="mor", compact_every=100)
+    assert pipe.late_horizon is not None  # the footer pass runs
+    res = pipe.run(binlog, max_batches=2)
+    assert len(res["applied"]) == 2 and len(calls) == 1
+    assert set(pipe._pending_mins) == {"2"}
