@@ -18,25 +18,21 @@ Scale notes (the reason for each design choice):
   *partial* (map-side) aggregation before the shuffle, so a hot key is
   collapsed to one candidate row per map task before any data moves — the
   two-phase merge the north rule asks for, with Catalyst doing phase one.
+  Measured (round 4, 32M events, hottest key 29% of rows, local[32]):
+  ``agg`` 2.3 s against 12.9 s for a plain ``row_number`` window, which
+  funnels each key through one reduce task.
 - ``strategy='salted'`` makes the two phases explicit: groupBy(keys, salt)
-  -> local winner, then groupBy(keys) -> global winner.  Useful when the
-  payload is huge (partial agg buffers whole rows) and you want to bound
-  the per-task state by salting first.
-- ``strategy='window'`` (row_number over partitionBy(keys)): on Spark
-  >=3.5 Catalyst's InferWindowGroupLimit rewrites the ``rn=1`` filter into
-  a map-side partial top-1 (``WindowGroupLimit ... Partial`` before the
-  exchange), making this plan skew-resistant too — and the measured
-  fastest (bench/skew_bench.py).  With that rule disabled
-  (``windowGroupLimitThreshold=-1``) it degrades to the classic one-task
-  hot-key funnel (8x slower at a 29%-hot key), which is why
-  ``strategy='auto'`` only picks it after checking the rule is active.
+  -> local winner, then groupBy(keys) -> global winner (3.5 s in the same
+  heat: its phase-one shuffle is one that partial aggregation makes
+  redundant).  The CDC ``pre_dedup`` paths use it: it bounds the per-task
+  state by salting first, independent of optimizer rewrites, when the
+  payload is huge (partial agg buffers whole rows).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def lww_order_key(seq_col: str = "seq", *tiebreakers: str) -> Column:
@@ -55,63 +51,7 @@ def lww_order_key(seq_col: str = "seq", *tiebreakers: str) -> Column:
     return F.struct(F.col(seq_col), *[F.col(c) for c in tiebreakers])
 
 
-def _window_group_limit_active(df: DataFrame) -> bool:
-    """True when Catalyst's InferWindowGroupLimit rule will rewrite a
-    ``row_number()=1`` filter into a map-side partial top-1 (Spark >=3.5;
-    ``spark.sql.optimizer.windowGroupLimitThreshold`` > 0)."""
-    try:
-        # no fallback default: on a build where the conf is unregistered
-        # (Spark < 3.5 — no InferWindowGroupLimit) this RAISES and we
-        # fail CLOSED; a supplied default would silently return 1000 and
-        # dispatch the one-task-per-key funnel (self-review round 4)
-        thr = int(
-            df.sparkSession.conf.get(
-                "spark.sql.optimizer.windowGroupLimitThreshold"
-            )
-        )
-    except Exception:  # noqa: BLE001 — conf absent: rule doesn't exist
-        return False
-    return thr > 0
-
-
-def choose_lww_strategy(
-    df: DataFrame,
-    keys: list[str],
-    sample_frac: float = 0.01,
-    hot_share_threshold: float = 0.05,
-) -> str:
-    """Pick the LWW plan from a cheap sampled key-frequency probe.
-
-    MEASURED dispatch (bench/skew_bench.py; BENCH/BASELINE.md round 4,
-    32M events, Zipf s=1.5, hottest key = 29% of all rows, local[32]):
-
-    - hot key at/above ``hot_share_threshold`` -> **'agg'**: hash
-      aggregate's partial (map-side) phase provably collapses the hot key
-      to one candidate row per map task before anything moves — the
-      north rule's two-phase merge with the map-task boundary acting as
-      the salt.  Measured 2.3s vs 12.9s for the naive one-task-per-key
-      window sort on identical input.  Chosen over the group-limit
-      window (1.5s, within VM drift) because partial agg's skew collapse
-      is structural, not a pattern-matched optimizer rewrite.
-    - below the threshold -> **'window'** when InferWindowGroupLimit is
-      active (the rn=1 filter becomes a map-side partial top-1 — the
-      measured fastest plan), else **'agg'** (with the rule disabled the
-      rn=1 window funnels each key through one reduce task: the classic
-      skew hazard, 8x slower in the same heat).
-    - 'salted' is never auto-chosen: its explicit phase-one salt pays an
-      extra shuffle that partial agg makes redundant (3.5s in the same
-      heat).  It remains available as the explicit, optimizer-independent
-      two-phase plan.
-    """
-    s = df.sample(fraction=sample_frac, seed=7).groupBy(*keys).count()
-    row = s.agg(
-        F.max("count").alias("mx"), F.sum("count").alias("n")
-    ).first()
-    if not row or not row["n"]:
-        return "agg"
-    if row["mx"] / row["n"] >= hot_share_threshold:
-        return "agg"
-    return "window" if _window_group_limit_active(df) else "agg"
+SALT_BUCKETS = 64  # phase-one salt fan-out of the 'salted' plan
 
 
 def lww_dedup(
@@ -120,19 +60,13 @@ def lww_dedup(
     seq_col: str = "seq",
     tiebreakers: list[str] | None = None,
     strategy: str = "agg",
-    salt_buckets: int = 64,
 ) -> DataFrame:
     """One winning row per key by max (seq, *tiebreakers).
 
-    Returns the full winning row (all columns of ``df``).
-    ``strategy='auto'`` probes key skew (:func:`choose_lww_strategy`) and
-    dispatches to 'agg' above the hot-share threshold, else to 'window'
-    while InferWindowGroupLimit is active (falling back to 'agg') —
-    never 'salted' and never the naive window; see the dispatcher's
-    docstring for the measurements.
+    Returns the full winning row (all columns of ``df``).  ``strategy``
+    is 'agg' (one shuffle, map-side partial collapse) or 'salted' (the
+    explicit two-phase plan); both pick the same winner.
     """
-    if strategy == "auto":
-        strategy = choose_lww_strategy(df, keys)
     tiebreakers = tiebreakers or []
     order = lww_order_key(seq_col, *tiebreakers)
     payload_cols = [c for c in df.columns]
@@ -148,9 +82,9 @@ def lww_dedup(
 
     if strategy == "salted":
         # Explicit two-phase: salt derived from the order key so same-key
-        # rows spread across `salt_buckets` reducers in phase one.
+        # rows spread across SALT_BUCKETS reducers in phase one.
         salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt_buckets))
+            "_salt", F.pmod(F.xxhash64(F.col(seq_col)), F.lit(SALT_BUCKETS))
         )
         local = (
             salted.groupBy(*keys, "_salt")
@@ -168,14 +102,6 @@ def lww_dedup(
                 ).alias("_w")
             )
             .select("_w.*")
-        )
-
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(order.desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
         )
 
     raise ValueError(f"unknown lww strategy: {strategy}")

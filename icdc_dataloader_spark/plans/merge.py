@@ -407,82 +407,6 @@ def merge_into(
 # ---------------------------------------------------------------------------
 
 
-def _mm3_mix_k1(k1: int) -> int:
-    k1 = (k1 * 0xCC9E2D51) & 0xFFFFFFFF
-    k1 = ((k1 << 15) | (k1 >> 17)) & 0xFFFFFFFF
-    return (k1 * 0x1B873593) & 0xFFFFFFFF
-
-
-def _mm3_mix_h1(h1: int, k1: int) -> int:
-    h1 = (h1 ^ k1) & 0xFFFFFFFF
-    h1 = ((h1 << 13) | (h1 >> 19)) & 0xFFFFFFFF
-    return (h1 * 5 + 0xE6546B64) & 0xFFFFFFFF
-
-
-def _mm3_fmix(h1: int, length: int) -> int:
-    h1 = (h1 ^ length) & 0xFFFFFFFF
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & 0xFFFFFFFF
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
-    return h1 ^ (h1 >> 16)
-
-
-def _mm3_hash_long(value: int, seed: int) -> int:
-    """Murmur3 32-bit hash of one LongType value, as Spark's Murmur3Hash
-    computes it (two 4-byte blocks, low word first — Spark
-    sql/catalyst hash.scala `hashLong`, same algorithm as Guava's
-    Murmur3_x86_32; public source)."""
-    v = value & 0xFFFFFFFFFFFFFFFF
-    h1 = _mm3_mix_h1(seed & 0xFFFFFFFF, _mm3_mix_k1(v & 0xFFFFFFFF))
-    h1 = _mm3_mix_h1(h1, _mm3_mix_k1((v >> 32) & 0xFFFFFFFF))
-    return _mm3_fmix(h1, 8)
-
-
-def shuffle_partition_id(values: list[int], n_partitions: int) -> int:
-    """The shuffle partition `repartition(n_partitions, *long_cols)`
-    assigns to a row with these LongType column values:
-    pmod(murmur3(values, seed=42), n) — HashPartitioning's
-    partitionIdExpression (Spark sql/catalyst partitioning.scala; public
-    source).  Lets the driver PLAN partition placement without a job."""
-    h = 42
-    for v in values:
-        h = _mm3_hash_long(v, h)
-    if h >= 1 << 31:  # Spark's hash is a signed int32
-        h -= 1 << 32
-    return ((h % n_partitions) + n_partitions) % n_partitions
-
-
-def _distinct_partition_salts(
-    bucket: int, k: int, n_partitions: int, used: set[int] | None = None,
-) -> list[int]:
-    """k salt values for ``bucket`` whose (bucket, salt) rows land in k
-    DISTINCT shuffle partitions — raw group ids can murmur3-collide,
-    merging two of a hot bucket's groups back into one task and re-growing
-    the straggler the salt exists to remove.
-
-    ``used``: pass ONE set across all hot buckets of a write so the
-    avoidance also holds BETWEEN them — two different hot buckets' groups
-    sharing a task halves the bound just like an intra-bucket collision.
-    When every partition is taken the set resets (separation is then
-    physically impossible; k hot groups > n_partitions)."""
-    vals: list[int] = []
-    if used is None:
-        used = set()
-    c = 0
-    while len(vals) < k and c < 1000 * k:
-        pid = shuffle_partition_id([bucket, c], n_partitions)
-        if pid not in used:
-            used.add(pid)
-            vals.append(c)
-            if len(used) == n_partitions:  # no more distinct pids exist
-                used.clear()
-        c += 1
-    while len(vals) < k:  # degenerate guard (tiny n_partitions)
-        vals.append(vals[0])
-    return vals
-
-
 def _one_split_scan(df: DataFrame) -> bool:
     """Whether ``df`` plans to one input partition with no exchange: its
     only leaf is a file scan listing one file no larger than
@@ -523,9 +447,6 @@ def append_delta(
     batch_id=None,
     error_sink=None,
     pre_dedup: bool = True,
-    colocate: bool = True,
-    colocate_salt: int = 1,
-    salt_buckets: dict[int, int] | list[int] | None = None,
 ) -> dict:
     """MoR apply: write the batch as delta files — NO base rewrite.
 
@@ -537,11 +458,18 @@ def append_delta(
     - ``pre_dedup``: explicit key-salted two-phase LWW inside the batch
       before writing (bounds delta size by the batch's key count — the hot
       path of the north rule's salting mechanism).
-    - ``colocate``: at most one delta file per bucket per batch.  A batch
-      that plans to one input split (:func:`_one_split_scan`, e.g. one
-      small binlog file) is written straight from its scan, since its one
-      write task already lands one file per bucket; any other batch is
-      shuffled by ``_bucket`` first.
+    - Colocated deltas: one delta file per bucket per batch, with one
+      exception for hot buckets.  A batch that plans to one input split
+      (:func:`_one_split_scan`, e.g. one small binlog file) is written
+      straight from its scan: its one write task already lands one file
+      per bucket.  Any other batch is rebalanced by ``_bucket``, and AQE
+      splits a shuffle partition larger than
+      ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` at map-output
+      boundaries.  Such a hot bucket gets one file per map-side piece
+      instead of one straggler task; compaction folds the files and
+      :func:`resolve` reads multi-file buckets natively.  The split is
+      per shuffle partition, so a cold bucket that hash-collides into a
+      hot bucket's partition is split along with it.
     - NEW_MODE events require apply-time liveness: if (and only if) the
       batch contains op='new', the current state of the touched buckets is
       resolved (a read, not a rewrite) and every key whose batch-winner is
@@ -576,80 +504,8 @@ def append_delta(
         .alias("has_new"),
     ))
 
-    # ``colocate``: at most one file per bucket (read- and
-    # footer-friendly).  A one-split batch already has that from its one
-    # write task; otherwise shuffle it by bucket.  Without it, write
-    # straight from the input splits (zero shuffle, one file per
-    # task×bucket — compaction folds them).
-    # ``colocate_salt`` > 1 splits each bucket's write across that many
-    # tasks (hot-BUCKET skew: a key carrying p% of the batch makes its
-    # bucket's single write task the stage straggler; salting bounds the
-    # straggler at ~p/salt while files-per-bucket stays <= salt — the
-    # manifests and resolve handle multi-file buckets natively).  The
-    # physical bucket assignment is untouched: files land in their _pb
-    # dir via partitionBy regardless of which task writes them.
-    # ``salt_buckets`` targets the split: only the listed (hot) buckets
-    # pay the files-per-bucket tax, cold buckets keep exactly one file —
-    # at thousands of buckets a global salt multiplies EVERY bucket's
-    # file count to shave one straggler, which is the wrong trade.
-    if colocate:
-        if colocate_salt > 1:
-            if salt_buckets is not None:
-                # TARGETED split (the colocate_salt='auto' path): only the
-                # listed hot buckets split — each with its OWN k (a dict
-                # {bucket: k}; a list means uniform k=colocate_salt) so a
-                # barely-hot bucket isn't over-split to the hottest one's
-                # degree — and every hot bucket's k salt values are chosen
-                # driver-side (one shared `used` set) so all hot groups of
-                # the write provably land in DISTINCT shuffle partitions;
-                # murmur3 can otherwise merge two groups into one task and
-                # silently re-grow the straggler.  Cold buckets keep
-                # salt 0: one task, one file, no tax.
-                hot = (
-                    {int(b): int(k) for b, k in salt_buckets.items()}
-                    if isinstance(salt_buckets, dict)
-                    else {int(b): colocate_salt for b in salt_buckets}
-                )
-                n_part = n_buckets
-                taken: set[int] = set()
-                expr = None
-                for b, k in sorted(hot.items()):  # empty -> salt 0 all
-                    k = max(2, min(k, n_part))
-                    remap = F.element_at(
-                        F.array(*[
-                            F.lit(v).cast("long") for v in
-                            _distinct_partition_salts(b, k, n_part, taken)
-                        ]),
-                        (F.pmod(F.xxhash64(F.col("_seq")), F.lit(k))
-                         + 1).cast("int"),
-                    )
-                    w = F.col("_bucket") == b
-                    expr = (F.when(w, remap) if expr is None
-                            else expr.when(w, remap))
-                salt = (expr.otherwise(F.lit(0).cast("long"))
-                        if expr is not None else F.lit(0).cast("long"))
-            else:
-                # GLOBAL split (fixed colocate_salt on every bucket):
-                # per-bucket remap would need an n_buckets-branch
-                # expression and widening the partition count multiplies
-                # scheduled tasks at thousands of buckets, so this path
-                # keeps n_buckets partitions and accepts probabilistic
-                # collisions (measured: a salt-8 split can read as /4 —
-                # BENCH/BASELINE.md).  The auto/targeted path above is
-                # the exact, recommended one.
-                n_part = n_buckets
-                salt = F.pmod(
-                    F.xxhash64(F.col("_seq")), F.lit(colocate_salt)
-                ).cast("long")
-            out = batch.repartition(
-                n_part, F.col("_bucket").cast("long"), salt
-            )
-        elif _one_split_scan(batch):
-            out = batch
-        else:
-            out = batch.repartition(n_buckets, "_bucket")
-    else:
-        out = batch
+    out = (batch if _one_split_scan(batch)
+           else batch.hint("rebalance", n_buckets, "_bucket"))
     new_version = lake.latest_version() + 1
     new_files = lake.write_data_files(out, new_version, schema, role="delta")
 

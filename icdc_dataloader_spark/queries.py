@@ -138,8 +138,8 @@ def lww_latest_event(spark, sf_dir):
     # faster plan (2.3s vs 3.5s at 32M rows) — salted pays a second
     # shuffle that the partial phase makes redundant.  Identical rows:
     # event_id is unique, so the per-key max is the same winner under any
-    # plan.  The explicit salted path stays covered by salted_ingest_state
-    # and the dedup test suite.
+    # plan.  The explicit salted path stays covered by the dedup test
+    # suite and by append_delta, whose pre_dedup defaults to it.
     win = dedup.lww_dedup(
         ev, ["user_id", "event_type"], seq_col="event_id", strategy="agg"
     )
@@ -1287,17 +1287,17 @@ ORACLES["cdc_final_state"] = CDC_FINAL_STATE_SQL
 
 
 def salted_ingest_state(spark, sf_dir):
-    """The same end-to-end replay as :func:`cdc_final_state`, but through
-    a pipeline with ``colocate_salt=4``: every delta bucket is written by
-    multiple tasks (the hot-bucket straggler mitigation,
-    bench/bucket_skew_bench.py), so in-loop compaction, tombstone GC and
-    the final resolve all operate over MULTI-FILE salted buckets.  Salting
-    only changes which task writes a bucket's rows — the oracle state must
-    be bit-identical to the unsalted replay (same SQL as cdc_final_state).
-
-    Driver-gate coverage for the round-5 salted write layout beyond the
-    pytest state-parity pins (test_colocate_salt_same_state_* /
-    test_auto_colocate_salt_*).
+    """The same end-to-end replay as :func:`cdc_final_state`, but with
+    split hot buckets: each binlog batch is stored as two files (two map
+    tasks) and the drain runs under a 1 KB
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so AQE's
+    rebalance splits every bucket of the delta write at map-output
+    boundaries (the hot-bucket straggler mitigation of
+    :func:`plans.merge.append_delta`).  In-loop compaction, tombstone GC
+    and the final resolve all run over MULTI-FILE delta buckets.  The
+    split only changes which task writes a bucket's rows, so the state
+    must be bit-identical to the unsplit replay (same SQL as
+    cdc_final_state).
     """
     from .plans.merge import read_state
     from .repos import make_pipeline
@@ -1305,12 +1305,17 @@ def salted_ingest_state(spark, sf_dir):
     mapped = _cdc_mapped_events(_t(spark, sf_dir, "events"))
     root = _query_workdir("salted_ingest_state", sf_dir)
     binlog = f"{root}/binlog"
-    mapped.write.partitionBy("batch_id").parquet(binlog)
+    mapped.repartition(2).write.partitionBy("batch_id").parquet(binlog)
     pipe = make_pipeline(
-        spark, f"{root}/lake", n_buckets=8, strategy="mor", compact_every=2,
-        colocate_salt=4,
+        spark, f"{root}/lake", n_buckets=8, strategy="mor", compact_every=2
     )
-    res = pipe.run(spark.read.parquet(binlog))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        res = pipe.run(spark.read.parquet(binlog))
+    finally:
+        spark.conf.set(key, prev)
     assert not res.get("quarantined"), res
     return read_state(spark, pipe.lake).select(
         "repo", "path", "commit", "lang", "content_sha256"

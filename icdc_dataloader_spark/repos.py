@@ -67,7 +67,6 @@ def make_pipeline(
     with_model: bool = True,
     strategy: str = "cow",
     compact_every: int = 8,
-    colocate_deltas: bool = True,
     **pipeline_kw,
 ) -> CDCPipeline:
     """Table + ledger + pipeline rooted at ``root`` (created if absent)."""
@@ -84,6 +83,5 @@ def make_pipeline(
         error_dir=os.path.join(root, "errors"),
         strategy=strategy,
         compact_every=compact_every,
-        colocate_deltas=colocate_deltas,
         **pipeline_kw,
     )

@@ -66,9 +66,6 @@ class CDCPipeline:
         strategy: str = "cow",
         compact_every: int = 8,
         retry_ttl: int = 3,
-        colocate_deltas: bool = True,
-        colocate_salt: int | str = 1,
-        salt_floor_rows: int = 50_000,
         late_horizon: int | None = 0,
         assume_ordered: bool = False,
         source_partition_col: str | None = None,
@@ -81,7 +78,9 @@ class CDCPipeline:
           proportional to the BATCH); reads resolve the per-key winner;
           compaction every ``compact_every`` batches folds deltas into a
           new base.  Identical final state (tested) — this is the ingest
-          path that survives 10^10 events.
+          path that survives 10^10 events.  A hot bucket's delta write is
+          split by AQE's rebalance (see :func:`plans.merge.append_delta`),
+          so it may land several files per batch until compaction.
 
         ``pre_dedup``: explicit in-batch key-salted two-phase LWW before the
         append.  OFF by default for MoR: the read-time resolve/compaction
@@ -142,40 +141,6 @@ class CDCPipeline:
         self.strategy = strategy
         self.compact_every = compact_every
         self.retry_ttl = retry_ttl
-        self.colocate_deltas = colocate_deltas
-        # hot-BUCKET skew mitigation: >1 splits each bucket's delta write
-        # across this many tasks (see append_delta.colocate_salt and
-        # bench/bucket_skew_bench.py for the measured tradeoff).
-        # 'auto' derives the NEXT batch's salt from the PREVIOUS batch's
-        # per-bucket row counts — already in the write's parquet footers
-        # (lineage), so the adaptation costs zero extra jobs.  Decision
-        # rule encodes the bench: at a 30.7%-of-batch hot bucket on 32
-        # buckets, salt 4-5 bounds the write straggler at ~share/salt
-        # (2.2x faster) while salt 8+ loses the gain to file-count
-        # overhead; uniform traffic (share ~ 1/n_buckets) stays at 1 and
-        # pays no file tax.  The split targets ONLY the hot buckets
-        # (salt_buckets) — cold buckets keep one file each, so the tax is
-        # paid exactly where the straggler is.  The learned profile
-        # persists in the ledger head (last_batch_rows) and is restored
-        # here on restart; a fresh ledger starts at 1 (one batch of
-        # learning, never wrong results — salting only changes which task
-        # writes a bucket's rows).
-        if isinstance(colocate_salt, str) and colocate_salt != "auto":
-            raise ValueError(
-                f"colocate_salt must be an int or 'auto': {colocate_salt!r}"
-            )
-        self.colocate_salt = colocate_salt
-        # minimum hot-bucket row count before 'auto' salts it: a tiny
-        # batch is always "skewed" by share but a few-thousand-row write
-        # has no straggler worth a file-count tax (set 0 to salt on share
-        # alone — tests do)
-        self.salt_floor_rows = salt_floor_rows
-        self._auto_salt = 1
-        self._auto_salt_buckets: dict[int, int] | None = None
-        if colocate_salt == "auto":
-            self._auto_salt, self._auto_salt_buckets = self._salt_from_rows(
-                ledger.last_batch_rows()
-            )
         self.late_horizon = late_horizon
         self.source_partition_col = source_partition_col
         # ``assume_ordered``: the caller vouches that apply_batch() is fed
@@ -290,42 +255,6 @@ class CDCPipeline:
             F.min(F.when(bad, F.col(self.seq_col))).alias("min_bad_seq"),
         ], ~bad
 
-    def _salt_from_rows(
-        self, rows_by_bucket: dict
-    ) -> tuple[int, dict[int, int] | None]:
-        """Next batch's (max salt, {hot bucket: its salt}) from per-bucket
-        row counts — parquet-footer lineage, or the ledger head's
-        ``last_batch_rows`` on restart.  Zero extra jobs either way.
-
-        share = a bucket's fraction of the batch.  Uniform traffic (every
-        share ≲ 2/n_buckets) → (1, None): no split, no file tax.  A hot
-        bucket gets its OWN k ~ share × n_buckets / 2, clamped to [2, 8] —
-        the region bench/bucket_skew_bench.py measured as the sweet spot
-        (salt4 at a 30.7% bucket = 2.2× faster; salt8 already loses to
-        file-count overhead).  Only buckets above the share threshold AND
-        ``salt_floor_rows`` split, so cold buckets and trickle batches
-        keep one file each and the tax lands exactly where a straggler
-        can exist."""
-        total = sum(rows_by_bucket.values())
-        if not total:
-            return self._auto_salt, self._auto_salt_buckets
-        n = self.lake.n_buckets()
-        # per-bucket k (not one global k from the hottest bucket): a
-        # barely-hot bucket at share ~2/n gets k=2, not the k=8 a
-        # 50%-share bucket earns — the file tax matches each bucket's own
-        # straggler.  salt_floor_rows guards trickle traffic: a 5-row
-        # batch is always "100% skewed" by share but has no straggler to
-        # split, and without the floor its learned profile would tax
-        # every following batch (and persist across restarts).
-        hot = {
-            int(b): max(2, min(8, round((r / total) * n / 2)))
-            for b, r in rows_by_bucket.items()
-            if r / total > 2.0 / n and r >= self.salt_floor_rows
-        }
-        if not hot:
-            return 1, None
-        return max(hot.values()), hot
-
     def _heal_ledger(self, batch_df: DataFrame, bid: str) -> None:
         """Re-record a batch the lake committed but the ledger missed
         (crash between commit and record).  Metrics/lineage are lost —
@@ -423,26 +352,8 @@ class CDCPipeline:
                 batch_id=bid,
                 error_sink=merge_err_sink,
                 pre_dedup=self.pre_dedup,
-                colocate=self.colocate_deltas,
-                colocate_salt=(
-                    self._auto_salt
-                    if self.colocate_salt == "auto"
-                    else self.colocate_salt
-                ),
-                salt_buckets=(
-                    self._auto_salt_buckets
-                    if self.colocate_salt == "auto"
-                    else None
-                ),
             )
             lineage = res.get("lineage") or {}
-            if self.colocate_salt == "auto":
-                self._auto_salt, self._auto_salt_buckets = (
-                    self._salt_from_rows(
-                        {b: (i or {}).get("rows") or 0
-                         for b, i in lineage.items()}
-                    )
-                )
             self._batches_since_compact += 1
             if self._batches_since_compact >= self.compact_every:
                 with timers.phase("compact"):

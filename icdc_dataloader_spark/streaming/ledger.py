@@ -69,11 +69,6 @@ class CheckpointLedger:
             # (resolve_quarantined) or it could be GC'd and the re-submit
             # would resurrect the deleted row.
             "quarantined_rows": {},
-            # per-bucket row counts of the most recent batch that carried
-            # lineage — pure data (no policy); CDCPipeline's
-            # colocate_salt='auto' reads it on restart so the learned
-            # hot-bucket write profile survives process death
-            "last_batch_rows": {},
             "segments": {},  # seg name -> records folded into this head
         }
 
@@ -149,11 +144,6 @@ class CheckpointLedger:
             cur = slw.get(part)
             if cur is None or ms > cur:
                 slw[part] = ms
-        if line.get("lineage"):
-            head["last_batch_rows"] = {
-                bucket: int((info or {}).get("rows") or 0)
-                for bucket, info in line["lineage"].items()
-            }
         if line.get("quarantined_min") is not None:
             head.setdefault("quarantined_rows", {})[line["batch_id"]] = line[
                 "quarantined_min"
@@ -351,13 +341,6 @@ class CheckpointLedger:
         records src_partitions).  min(values) bounds every future event
         under per-partition monotone appends."""
         return dict(self._load_head().get("source_low_water", {}))
-
-    def last_batch_rows(self) -> dict:
-        """Per-bucket row counts of the most recently recorded batch that
-        carried lineage (empty on a fresh ledger or after heal-only
-        records, which lose lineage).  Read by colocate_salt='auto' on
-        restart to resume its learned hot-bucket profile."""
-        return dict(self._load_head().get("last_batch_rows", {}))
 
     # -- row-level quarantine holds (tombstone-GC safety) --------------------
 

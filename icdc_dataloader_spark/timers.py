@@ -3,8 +3,8 @@
 The scaling criterion (north rule: efficiency >= 0.8 from N to 4N) is an
 Amdahl problem: any driver-side serial second per batch costs efficiency
 directly.  These timers break the pipeline's wall time into phases so the
-serial term is measured, not guessed (bench/cdc_job.py --profile prints
-them; they are no-ops otherwise: one time.time() pair per phase).
+serial term is measured, not guessed (``bench_extra.py`` prints them;
+they cost one time.time() pair per phase).
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ column's own type, NULL lowest.  Generated batches carry ``_seq`` ties,
 NULL and ``''`` string tiebreakers and a LongType tiebreaker (9 vs 10:
 numeric, not text order; 2^53 vs 2^53+1 next to a NULL: exact, not
 float64).  The winner must be the same under ``lww_dedup``
-(agg, salted, window), ``read_state`` after a MoR append and after
+(agg, salted), ``read_state`` after a MoR append and after
 ``compact``, the COW ``merge_into`` and the change feed's pandas fold; in
 the repos table's domain it must also match the independent oracle.
 """
@@ -106,7 +106,7 @@ def test_every_lww_path_picks_the_same_winner(spark, raw):
     batches = [b for b in (rows[:half], rows[half:]) if b]
     df = spark.createDataFrame(rows, SCHEMA)
 
-    for strategy in ("agg", "salted", "window"):
+    for strategy in ("agg", "salted"):
         got = lww_dedup(df, ["k"], seq_col="_seq", tiebreakers=TB,
                         strategy=strategy).collect()
         assert _v_by_key(got) == want_all, strategy

@@ -403,3 +403,33 @@ def test_ledger_midfile_corruption_retires_segment_keeps_history(tmp_path):
     led3 = CheckpointLedger(led.root)
     assert led3.totals()["n"] == 5 and led3.is_applied(4)
     assert led3.batch_record(4)["version"] == 5
+
+
+def test_ledger_head_with_retired_key_loads_records_and_heals(tmp_path):
+    """A head written by an older release still carries the retired
+    per-bucket profile ``last_batch_rows``.  It must load, record and heal
+    exactly like a head without it."""
+    ledgers = []
+    for name, extra in (("old", {"last_batch_rows": {"0": 10, "1": 10}}),
+                        ("new", {})):
+        led = CheckpointLedger(str(tmp_path / name))
+        led.record(0, 1, {"n": 1}, _lineage(0))
+        led.record(1, 2, {"n": 1}, _lineage(1), quarantined_min=11)
+        head = json.load(open(led.head_path))
+        head.update(extra)
+        json.dump(head, open(led.head_path, "w"))
+        # crash window: segment line appended, head write lost
+        seg = sorted(os.listdir(led.seg_dir))[-1]
+        with open(os.path.join(led.seg_dir, seg), "a") as fh:
+            fh.write(json.dumps({"batch_id": "2", "version": 3,
+                                 "metrics": {"n": 1},
+                                 "lineage": _lineage(2)}) + "\n")
+        healed = CheckpointLedger(led.root)
+        assert healed.is_applied(2)
+        healed.record(3, 4, {"n": 1}, _lineage(3))
+        ledgers.append(CheckpointLedger(led.root))
+    old, new = ledgers
+    for read in ("applied", "totals", "low_water", "quarantine_holds"):
+        assert getattr(old, read)() == getattr(new, read)(), read
+    assert old.batch_record(3) == new.batch_record(3)
+    assert old.totals()["n"] == 4 and old.quarantine_holds() == {"1": 11}

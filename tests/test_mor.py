@@ -199,3 +199,22 @@ def test_direct_apply_batch_never_gcs_tombstones(spark, tmp_path):
     ]), "b1")
     state = _state(spark, pipe)
     assert ("r2", "b") not in state
+
+
+def test_salted_ingest_state_replays_split_buckets(spark):
+    """The ``salted_ingest_state`` oracle query must really replay split
+    hot buckets: some version of its lake holds more than one delta file
+    in a bucket."""
+    from icdc_dataloader_spark.plans.lake import LakeTable
+    from icdc_dataloader_spark.queries import QUERIES
+    from test_entry import SF_DIR
+    from test_plans import _files_per_bucket
+
+    df = QUERIES["salted_ingest_state"](spark, SF_DIR)
+    some_file = df.inputFiles()[0].removeprefix("file:")
+    lake = LakeTable(some_file[: some_file.index("/data/")])
+    most = max(
+        max(_files_per_bucket(lake, v).values(), default=0)
+        for v in range(lake.latest_version() + 1)
+    )
+    assert most > 1, "no version split a bucket's delta write"

@@ -14,6 +14,8 @@
 4. vacuum must drop emptied bucket subdirectories left behind by partial
    compactions (file-granularity unlink kept marker files + empty dirs
    forever).
+5. A hot bucket's delta write is split (several files) and still resolves
+   and compacts to the unsplit state.
 """
 
 import os
@@ -129,23 +131,6 @@ def _ev(seq, op, repo, batch_id, lang="python", path="p"):
         content=None if op == "delete" else f"v{seq}",
         batch_id=batch_id,
     )
-
-
-def _paths_by_bucket(spark, repo, n_candidates, n_buckets):
-    """Candidate (repo, path) keys grouped by the lake's own hash bucket —
-    lets a test construct a hot BUCKET out of many DISTINCT keys (a single
-    hot key is collapsed by pre-dedup before the write and exercises
-    nothing)."""
-    from icdc_dataloader_spark.plans.lake import bucket_expr
-
-    df = spark.createDataFrame(
-        [(repo, f"p{i}") for i in range(n_candidates)],
-        "repo string, path string",
-    ).withColumn("_b", bucket_expr(["repo", "path"], n_buckets))
-    out = {}
-    for r in df.collect():
-        out.setdefault(r["_b"], []).append(r["path"])
-    return out
 
 
 def test_quarantine_hold_recorded_and_persisted(spark, tmp_path):
@@ -331,37 +316,53 @@ def test_vacuum_removes_emptied_bucket_subdirs(spark, tmp_path):
 
 
 # --------------------------------------------------------------------------
-# 5. Hot-bucket salted delta writes (round-4 VERDICT #6)
+# 5. Hot-bucket delta writes split by AQE's rebalance (round-4 VERDICT #6)
 # --------------------------------------------------------------------------
 
 
-def test_colocate_salt_same_state_multi_file_buckets(spark, tmp_path):
-    """colocate_salt splits a bucket's delta write across several tasks:
-    the bucket gains multiple files (the manifests' native multi-file
-    case) and resolve/compaction produce the identical state."""
+def test_rebalance_splits_hot_bucket_same_state(spark, tmp_path):
+    """A multi-split batch's delta write is rebalanced by bucket: under a
+    small advisory partition size AQE splits the hot bucket's partition
+    across map-side pieces (several files, the manifests' native
+    multi-file case), and resolve/compaction produce the same state as
+    the unsplit write."""
     from icdc_dataloader_spark.plans.lake import LakeTable
-    from icdc_dataloader_spark.plans.merge import compact, table_schema
+    from icdc_dataloader_spark.plans.merge import table_schema
     from icdc_dataloader_spark.repos import repos_payload_schema
 
-    def build(salt):
+    # hot key rH carries most rows; unique seqs.  createDataFrame spreads
+    # the rows over several local partitions: a multi-split batch
+    rows = [_up("rH", "p", s) for s in range(1, 60)] + [
+        _up(f"r{i}", "p", 100 + i) for i in range(10)
+    ] + [_del("rH", "p", 200)] + [_up("rH", "p", 300)]
+    batch = _batch(spark, rows)
+    assert batch.rdd.getNumPartitions() > 1
+
+    def build(name):
         lake = LakeTable.create(
-            str(tmp_path / f"lake_s{salt}"),
-            table_schema(repos_payload_schema()),
+            str(tmp_path / name), table_schema(repos_payload_schema()),
             ["repo", "path"], n_buckets=2, tiebreakers=TIEBREAKERS,
         )
-        # hot key rH carries most rows; unique seqs
-        rows = [_up("rH", "p", s) for s in range(1, 60)] + [
-            _up(f"r{i}", "p", 100 + i) for i in range(10)
-        ] + [_del("rH", "p", 200)] + [_up("rH", "p", 300)]
-        append_delta(spark, lake, _batch(spark, rows), batch_id="b1",
-                     pre_dedup=False, colocate=True, colocate_salt=salt)
+        append_delta(spark, lake, batch, batch_id="b1", pre_dedup=False)
         return lake
 
-    plain, salted = build(1), build(4)
-    per_bucket = {}
-    for f in salted.snapshot()["files"]:
-        per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
-    assert max(per_bucket.values()) > 1, "salt must split the hot bucket"
+    def files_per_bucket(lake):
+        per_bucket = {}
+        for f in lake.snapshot()["files"]:
+            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+        return per_bucket
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    plain = build("plain")
+    spark.conf.set(key, "1k")
+    try:
+        split = build("split")
+    finally:
+        spark.conf.set(key, prev)
+    assert set(files_per_bucket(plain).values()) == {1}
+    hot = max(plain.snapshot()["files"], key=lambda f: f["rows"])["bucket"]
+    assert files_per_bucket(split)[hot] > 1, "the hot bucket must be split"
 
     def state(lake):
         return {
@@ -369,12 +370,12 @@ def test_colocate_salt_same_state_multi_file_buckets(spark, tmp_path):
             for r in resolve(spark, lake).collect()
         }
 
-    assert state(plain) == state(salted)
-    # compaction folds the salted multi-file buckets identically
+    assert state(plain) == state(split)
+    # compaction folds the split multi-file bucket identically
     compact(spark, plain)
-    compact(spark, salted)
-    assert state(plain) == state(salted)
-    assert len(salted.snapshot()["files"]) <= 2  # back to <=1 base/bucket
+    compact(spark, split)
+    assert state(plain) == state(split)
+    assert set(files_per_bucket(split).values()) == {1}  # <=1 base/bucket
 
 
 def test_heal_propagates_hold_computation_failure(spark, tmp_path):
@@ -467,191 +468,3 @@ def test_without_hold_resurrection_really_happens(spark, tmp_path,
         "hold disabled: the deleted key must resurrect (else the hold "
         "tests test nothing)"
     )
-
-
-def test_auto_colocate_salt_adapts_to_bucket_skew(spark, tmp_path):
-    """colocate_salt='auto': the NEXT batch's salt derives from the
-    PREVIOUS batch's per-bucket footer lineage (zero extra jobs).
-    Skewed traffic raises it (hot bucket written as multiple files);
-    uniform traffic keeps it at 1 (no file-count tax); state matches a
-    fixed salt=1 pipeline exactly."""
-    def drain(root, batches, salt):
-        pipe = make_pipeline(
-            spark, root, n_buckets=4, strategy="mor", compact_every=100,
-            colocate_salt=salt, salt_floor_rows=0,
-        )
-        for i, rows in enumerate(batches):
-            d = _write_binlog(spark, root, f"d{i}", rows)
-            res = pipe.run(spark.read.parquet(d))
-            assert not res["quarantined"]
-        return pipe
-
-    # batch 0: ~85% of rows are DISTINCT keys that share one hash bucket
-    # (a hot repo with many paths — distinct keys survive pre-dedup, so
-    # the bucket's write really is one task's straggler); batch 1: the
-    # salt learned from batch 0 must split that bucket's write
-    by_b = _paths_by_bucket(spark, "rHot", 200, 4)
-    hot_bucket, hot_paths = max(by_b.items(), key=lambda kv: len(kv[1]))
-    cold_paths = [ps[0] for b, ps in by_b.items() if b != hot_bucket]
-    assert len(hot_paths) >= 34 and len(cold_paths) >= 3
-    hot = [
-        _ev(1 + i, "upsert", "rHot", 0, path=hot_paths[i]) for i in range(34)
-    ] + [
-        _ev(100 + i, "upsert", "rHot", 0, path=p)
-        for i, p in enumerate(cold_paths[:3])
-    ]
-    hot2 = [
-        _ev(200 + i, "upsert", "rHot", 1, path=hot_paths[i])
-        for i in range(30)
-    ] + [
-        _ev(300 + i, "upsert", "rHot", 1, path=p)
-        for i, p in enumerate(cold_paths[:3])
-    ]
-
-    auto = drain(str(tmp_path / "auto"), [hot, hot2], "auto")
-    assert auto._auto_salt > 1, "skew must raise the learned salt"
-    assert auto._auto_salt_buckets, "skew must identify the hot buckets"
-    # the split is TARGETED: in batch 1's version dir the hot bucket is
-    # written by multiple tasks (several files) while every cold bucket
-    # keeps exactly one file — no global file tax
-    b1 = [f for f in auto.lake.delta_files() if "/v2/" in f"/{f['path']}"]
-    assert b1, "batch 1 must have written delta files under v2"
-    per_bucket = {}
-    for f in b1:
-        per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
-    hot_set = set(auto._auto_salt_buckets)
-    assert max(per_bucket.get(b, 0) for b in hot_set) > 1, (
-        "batch 1's hot bucket must have been written by multiple tasks"
-    )
-    for b, n_files in per_bucket.items():
-        if b not in hot_set:
-            assert n_files == 1, (
-                f"cold bucket {b} must not pay the salt file tax"
-            )
-
-    plain = drain(str(tmp_path / "plain"), [hot, hot2], 1)
-
-    def state(pipe):
-        return {
-            (r["repo"], r["path"]): (r["commit"], r["_seq"])
-            for r in resolve(spark, pipe.lake)
-            .select("repo", "path", "commit", "_seq").collect()
-        }
-
-    assert state(auto) == state(plain)
-
-    # uniform traffic: the learned salt returns to 1
-    uni = [[_ev(1000 + i, "upsert", f"q{i}", 0) for i in range(40)]]
-    auto_u = drain(str(tmp_path / "auto_u"), uni, "auto")
-    assert auto_u._auto_salt == 1
-    assert auto_u._auto_salt_buckets is None
-
-
-def test_auto_colocate_salt_survives_restart(spark, tmp_path):
-    """The learned hot-bucket profile persists in the ledger head
-    (last_batch_rows): a NEW pipeline over the same root resumes with the
-    same salt and hot-bucket set instead of re-learning from 1."""
-    root = str(tmp_path / "lake")
-    pipe = make_pipeline(
-        spark, root, n_buckets=4, strategy="mor", compact_every=100,
-        colocate_salt="auto", salt_floor_rows=0,
-    )
-    by_b = _paths_by_bucket(spark, "rHot", 200, 4)
-    hot_bucket, hot_paths = max(by_b.items(), key=lambda kv: len(kv[1]))
-    cold_paths = [ps[0] for b, ps in by_b.items() if b != hot_bucket]
-    rows = [
-        _ev(1 + i, "upsert", "rHot", 0, path=hot_paths[i]) for i in range(34)
-    ] + [
-        _ev(100 + i, "upsert", "rHot", 0, path=p)
-        for i, p in enumerate(cold_paths[:3])
-    ]
-    d = _write_binlog(spark, root, "d0", rows)
-    assert not pipe.run(spark.read.parquet(d))["quarantined"]
-    assert pipe._auto_salt > 1 and pipe._auto_salt_buckets
-
-    # process death: a fresh pipeline over the same lake+ledger restores
-    # the profile at construction time, before any batch runs
-    pipe2 = make_pipeline(
-        spark, root, n_buckets=4, strategy="mor", compact_every=100,
-        colocate_salt="auto", salt_floor_rows=0,
-    )
-    assert pipe2._auto_salt == pipe._auto_salt
-    assert pipe2._auto_salt_buckets == pipe._auto_salt_buckets
-
-    # and a fixed-salt pipeline over the same root ignores the hint
-    pipe3 = make_pipeline(
-        spark, root, n_buckets=4, strategy="mor", compact_every=100,
-        colocate_salt=1,
-    )
-    assert pipe3._auto_salt == 1 and pipe3._auto_salt_buckets is None
-
-
-def test_shuffle_partition_id_matches_spark(spark):
-    """The driver-side partition-id oracle (murmur3 of LongType cols,
-    seed 42, pmod) must equal where repartition(P, cols) ACTUALLY puts the
-    row — the exact-split remap in append_delta plans placement with it.
-    Pins the HashPartitioning contract so a Spark upgrade that changes
-    hashing fails here, not as a silent straggler regression."""
-    from icdc_dataloader_spark.plans.merge import (
-        _distinct_partition_salts,
-        shuffle_partition_id,
-    )
-
-    rows = [(b, s) for b in (0, 1, 5, 31, 4095) for s in range(9)]
-    df = spark.createDataFrame(rows, "b long, s long")
-    for P in (4, 8, 32):
-        got = df.repartition(P, "b", "s").select(
-            "b", "s", F.spark_partition_id().alias("pid")
-        ).collect()
-        for r in got:
-            assert r["pid"] == shuffle_partition_id([r["b"], r["s"]], P), (
-                f"placement oracle wrong for ({r['b']},{r['s']}) at P={P}"
-            )
-
-    # the remap delivers what it promises: k mutually-distinct partitions
-    for b in (0, 1, 7, 31):
-        for k in (2, 4, 8):
-            vals = _distinct_partition_salts(b, k, 32)
-            pids = [shuffle_partition_id([b, v], 32) for v in vals]
-            assert len(set(pids)) == k
-
-    # ...and ACROSS hot buckets when a shared `used` set is threaded (two
-    # different hot buckets' groups sharing a task halves the bound just
-    # like an intra-bucket collision)
-    taken = set()
-    all_pids = []
-    for b in (0, 1, 7):
-        vals = _distinct_partition_salts(b, 4, 32, taken)
-        all_pids += [shuffle_partition_id([b, v], 32) for v in vals]
-    assert len(set(all_pids)) == 12
-
-
-def test_auto_salt_floor_ignores_trickle_batches(spark, tmp_path):
-    """A tiny 100%-skewed batch must NOT teach the pipeline to salt: by
-    share alone every trickle batch looks maximally hot, but a few-row
-    write has no straggler, and the learned tax would hit every following
-    batch (and persist across restarts).  Default salt_floor_rows guards
-    this; the other auto tests set it to 0 to test the mechanism."""
-    root = str(tmp_path / "lake")
-    pipe = make_pipeline(
-        spark, root, n_buckets=4, strategy="mor", compact_every=100,
-        colocate_salt="auto",  # default salt_floor_rows=50k
-    )
-    by_b = _paths_by_bucket(spark, "rHot", 60, 4)
-    _, hot_paths = max(by_b.items(), key=lambda kv: len(kv[1]))
-    rows = [
-        _ev(1 + i, "upsert", "rHot", 0, path=hot_paths[i]) for i in range(8)
-    ]
-    d = _write_binlog(spark, root, "d0", rows)
-    assert not pipe.run(spark.read.parquet(d))["quarantined"]
-    assert pipe._auto_salt == 1 and pipe._auto_salt_buckets is None
-
-
-def test_colocate_salt_rejects_bad_string(spark, tmp_path):
-    """A typo'd mode ('Auto') must fail at construction with a clear
-    ValueError, not deep in the first write with a str/int TypeError."""
-    with pytest.raises(ValueError, match="colocate_salt"):
-        make_pipeline(
-            spark, str(tmp_path / "lake"), n_buckets=4, strategy="mor",
-            colocate_salt="Auto",
-        )

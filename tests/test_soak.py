@@ -14,9 +14,9 @@ at the end:
   and replaying ONLY its increments reconstructs the exact state — the
   feed stays lossless through 100 drains of compaction/GC/vacuum and a
   mid-soak schema evolution;
-- adaptive salting under soak (round-5): the pipeline runs
-  colocate_salt='auto', so the learned hot-bucket profile and salted
-  multi-file delta buckets flow through every lifecycle event above
+- split hot buckets under soak: the drains run under a 1 KB AQE advisory
+  partition size, so the delta write's rebalance splits buckets into
+  multi-file deltas that flow through every lifecycle event above
   without breaking parity or the footprint bounds.
 """
 
@@ -111,26 +111,30 @@ def _apply_increment(feed_state, inc):
 
 
 def test_100_drain_soak(spark, tmp_path):
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        _soak(spark, tmp_path)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _soak(spark, tmp_path):
     from icdc_dataloader_spark.streaming.feed import ChangeFeedConsumer
+    from test_plans import _files_per_bucket
 
     rng = np.random.default_rng(42)
-    # colocate_salt='auto' (round-5): the adaptive hot-bucket salting
-    # lives through the whole soak — the learned profile re-derives each
-    # drain from footer lineage, salted multi-file buckets flow through
-    # compaction/GC/vacuum/the feed, and the end-state footprint bounds
-    # below must still hold
-    # (salt_floor_rows=0: soak drains are 150 rows — far below the
-    # production floor — and the point here is exercising the mechanism)
     pipe = make_pipeline(
         spark, str(tmp_path / "out"), n_buckets=8, strategy="mor",
-        compact_every=8, late_horizon=0, colocate_salt="auto",
-        salt_floor_rows=0,
+        compact_every=8, late_horizon=0,
     )
     cons = ChangeFeedConsumer(pipe.lake, str(tmp_path / "feed_ckpt"))
     feed_state = {}
     all_rows = []
     seq = 1
     evolved = False
+    split_buckets = 0
     for d in range(N_DRAINS):
         if d == EVOLVE_AT:
             pipe.lake.evolve_schema(
@@ -150,6 +154,8 @@ def test_100_drain_soak(spark, tmp_path):
         spark.createDataFrame(pdf).write.partitionBy("batch_id").parquet(src)
         res = pipe.run(spark.read.parquet(src))
         assert not res["quarantined"], (d, res)
+        per_bucket = _files_per_bucket(pipe.lake, pipe.lake.latest_version())
+        split_buckets += sum(n > 1 for n in per_bucket.values())
         # tail the feed BEFORE vacuum (the cursor then always points at
         # the head, so vacuum can never reclaim a snapshot the consumer
         # still needs)
@@ -167,6 +173,8 @@ def test_100_drain_soak(spark, tmp_path):
             assert feed_state == expected, (
                 f"feed replay diverged at drain {d}"
             )
+
+    assert split_buckets, "no drain split a bucket's delta write"
 
     # final parity (also covers post-evolution rows)
     assert _actual_state(spark, pipe, True) == _expected_state(all_rows)
