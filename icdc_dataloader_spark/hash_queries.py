@@ -23,6 +23,7 @@ from .functions.identity import get_uuid, uuid5_expr
 from .functions.porthash import family_member_sql, hash_pair_sql, hex_int_sql
 from .operators import dedup, similarity
 from .operators.similarity import wta_pairs
+from .tables import table as _t
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments
@@ -39,10 +40,6 @@ UUID_DOMAIN = "repos.example.org"
 FP_MOD = 1_000_000_007
 FP_BASE = 131
 _SHIFT = 1 << 31  # encodes (fp, pw) fold state in one BIGINT for list_reduce
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

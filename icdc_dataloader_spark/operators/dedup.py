@@ -182,9 +182,15 @@ def minhash_signatures(
     (functions/porthash.py) so the DuckDB oracle can replicate the full
     algorithm value-for-value; 'xxhash64' is the codegen scale path.
 
+    The num_hashes minima are one ``F.expr`` of SQL text,
+    ``array(min(m_0), ..., min(m_n))``, not num_hashes ``F.min`` Columns:
+    PySpark wraps every Column-building call in ``_with_origin``, about
+    five py4j commands each, so building the 32-wide aggregate from
+    Columns cost more driver time than running it at small inputs.
+
     Output: (id, sig: array<long>).
     """
-    from ..functions.porthash import family_member, hash_pair_from_digest
+    from ..functions.porthash import family_member_expr, hash_pair_from_digest
 
     if repartition:
         sc = df.sparkSession.sparkContext
@@ -217,16 +223,12 @@ def minhash_signatures(
         hashed = sh.select(
             "id", hash_pair_from_digest(F.md5(F.col("_s"))).alias("_p")
         )
-        members = [family_member(F.col("_p"), i) for i in range(num_hashes)]
+        members = [family_member_expr("_p", i) for i in range(num_hashes)]
     else:
         hashed = sh.select("id", F.xxhash64(F.col("_s")).alias("_h"))
-        members = [F.xxhash64(F.col("_h"), F.lit(i)) for i in range(num_hashes)]
-    agg = hashed.groupBy("id").agg(
-        *[F.min(m).alias(f"_m{i}") for i, m in enumerate(members)]
-    )
-    return agg.select(
-        "id", F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")
-    )
+        members = [f"xxhash64(_h, {i})" for i in range(num_hashes)]
+    mins = ", ".join(f"min({m})" for m in members)
+    return hashed.groupBy("id").agg(F.expr(f"array({mins})").alias("sig"))
 
 
 def minhash_lsh_dedup(
@@ -269,35 +271,35 @@ def minhash_lsh_dedup(
       while a checkpointed RDD is released by the ContextCleaner as soon
       as the result DataFrame is garbage-collected (advice round 5).
 
+    The band hashes (one ``posexplode(array(...))``) and the Jaccard
+    estimate are SQL text for the reason given in
+    :func:`minhash_signatures` (``_with_origin`` costs about five py4j
+    commands per Column call).  The estimate counts agreeing positions
+    with a sum of ``CASE`` terms instead of ``size(filter(zip_with(...)))``:
+    same values (``sig`` is built by ``array(...)``, never a NULL array; a
+    NULL element counts 0 in both; k/num_hashes as a double) and no
+    interpreted lambda in the plan.
+
     Output: (id_a, id_b, est_jaccard) with id_a < id_b, distinct.
     """
-    from ..functions.porthash import hex_int
+    from ..functions.porthash import hex_int_expr
 
     rows = num_hashes // bands
-    band_hash_fn = hex_int if hash_mode == "portable" else F.xxhash64
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_k, hash_mode=hash_mode
     ).localCheckpoint(eager=False)
+
+    def band_hash(b: int) -> str:
+        key = "concat_ws(',', %s)" % ", ".join(
+            f"CAST(element_at(sig, {b * rows + r + 1}) AS STRING)"
+            for r in range(rows)
+        )
+        return hex_int_expr(key) if hash_mode == "portable" else f"xxhash64({key})"
+
+    band_hashes = ", ".join(band_hash(b) for b in range(bands))
     banded = sigs.select(
         "id",
-        F.posexplode(
-            F.array(
-                *[
-                    band_hash_fn(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(F.col("sig"), b * rows + r + 1).cast(
-                                    "string"
-                                )
-                                for r in range(rows)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
+        F.expr(f"posexplode(array({band_hashes}))").alias("band_id", "band_hash"),
     )
     bucket_sizes = banded.groupBy("band_id", "band_hash").agg(
         F.count(F.lit(1)).alias("_n")
@@ -318,15 +320,11 @@ def minhash_lsh_dedup(
     )
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        / F.lit(float(num_hashes))
-    ).alias("est_jaccard")
+    agree = " + ".join(
+        f"CASE WHEN sig_a[{i}] = sig_b[{i}] THEN 1 ELSE 0 END"
+        for i in range(num_hashes)
+    )
+    est = F.expr(f"({agree}) / {num_hashes}D").alias("est_jaccard")
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")

@@ -22,10 +22,7 @@ from .functions.identity import signature_expr
 from .model import Model, PropDef
 from .operators import dedup, relationships, similarity, validate
 from .functions import coerce
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .tables import table as _t
 
 
 def _dsum(col) -> F.Column:

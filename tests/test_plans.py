@@ -131,6 +131,21 @@ def test_no_python_udf_in_hot_path(spark):
         assert "ArrowEvalPython" not in plan, f"{name} unexpectedly uses a Python UDF"
 
 
+def test_minhash_near_dups_build_cost_and_plan(spark, round_trips):
+    """Building the minhash query (tables already open) sends at most
+    1,500 py4j commands — its wide expressions are SQL text, one call
+    each, where building them from Columns sent about 5,700 — and its
+    executed plan has no interpreted lambda."""
+    from icdc_dataloader_spark.hash_queries import minhash_near_dups
+
+    minhash_near_dups(spark, SF)
+    with round_trips() as used:
+        df = minhash_near_dups(spark, SF)
+    assert used[0] <= 1500, used[0]
+    df.collect()
+    assert "lambdafunction" not in _plan(df).lower()
+
+
 REPOS_SCHEMA = (
     "repo string, path string, commit string, lang string, content string,"
     " content_sha256 string, _seq long, _op string"

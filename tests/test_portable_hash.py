@@ -5,7 +5,10 @@
 - portable doc_fingerprint / simhash match an independent pure-Python
   reimplementation (md5 primitive, same fold);
 - embedding_cosine_near_dups finds PLANTED near-identical vectors (the
-  round-1 gap: zero evidence) and the bucket cap bounds degenerate inputs.
+  round-1 gap: zero evidence) and the bucket cap bounds degenerate inputs;
+- the Spark SQL text form of hex_int equals its Column form, the text
+  family members equal a pure-Python a + i * b, and the family index
+  guard fires before any Spark job.
 """
 
 import hashlib
@@ -15,12 +18,21 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest
 from pyspark.sql import functions as F
 
 from icdc_dataloader_spark.functions.identity import (
     get_uuid,
     make_uuid5_udf,
     uuid5_expr,
+)
+from icdc_dataloader_spark.functions.porthash import (
+    B_MOD,
+    FAMILY_MAX_I,
+    family_member_expr,
+    hash_pair_from_digest,
+    hex_int,
+    hex_int_expr,
 )
 from icdc_dataloader_spark.functions.text import doc_fingerprint
 from icdc_dataloader_spark.operators.dedup import simhash_portable
@@ -59,8 +71,53 @@ def test_uuid5_pinned_reference_vector(spark):
     )
 
 
+def test_text_forms_match_column_forms_and_reference(spark):
+    df = spark.createDataFrame([(s,) for s in SAMPLES + [None]], "s string")
+    df = df.select("s", hash_pair_from_digest(F.md5("s")).alias("_p"))
+    idx = [0, 1, 17, FAMILY_MAX_I]
+    cols = [hex_int(F.col("s")).alias("c_hex"),
+            F.expr(hex_int_expr("s")).alias("t_hex"),
+            hex_int(F.col("s"), 8).alias("c_hex8"),
+            F.expr(hex_int_expr("s", 8)).alias("t_hex8")]
+    cols += [F.expr(family_member_expr("_p", i)).alias(f"t_m{i}") for i in idx]
+    rows = {r["s"]: r for r in df.select("s", *cols).collect()}
+    assert set(rows) == set(SAMPLES) | {None}
+    for s, r in rows.items():
+        assert r["c_hex"] == r["t_hex"] and r["c_hex8"] == r["t_hex8"], s
+        if s is None:
+            assert r["t_hex"] is None
+            assert all(r[f"t_m{i}"] is None for i in idx)
+            continue
+        assert r["t_hex"] == _hex_int(s)
+        a, b = _hash_pair(s)
+        for i in idx:
+            assert r[f"t_m{i}"] == a + i * b, (s, i)
+
+
+def test_family_guard_raises_before_any_job(spark):
+    from icdc_dataloader_spark.operators.dedup import minhash_signatures
+
+    with pytest.raises(ValueError):
+        family_member_expr("_p", FAMILY_MAX_I + 1)
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-guard", "family index guard")
+    try:
+        with pytest.raises(ValueError):
+            minhash_signatures(docs, num_hashes=FAMILY_MAX_I + 2,
+                               hash_mode="portable")
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("minhash-guard") == []
+
+
 def _hex_int(s: str, n_hex: int = 15) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:n_hex], 16)
+
+
+def _hash_pair(s: str) -> tuple[int, int]:
+    h = hashlib.md5(s.encode("utf-8")).hexdigest()
+    return int(h[:15], 16), int(h[15:30], 16) % B_MOD
 
 
 def _py_fingerprint(text: str, mod: int = 1_000_000_007, base: int = 131) -> int:

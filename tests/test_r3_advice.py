@@ -9,7 +9,7 @@
 - NULL-keyed tombstones keep their watermark through the resolve join
   (delete->recreate lineage reset under null-safe equality);
 - family_member_sql enforces the same overflow-safe index range as the
-  Spark-side family_member;
+  Spark-side family_member_expr;
 - change_bursts drops null event times instead of letting NaT poison the
   open burst's start.
 """

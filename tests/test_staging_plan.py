@@ -20,22 +20,6 @@ from icdc_dataloader_spark.sources.gen import gen_events_pandas
 from icdc_dataloader_spark.streaming import cdc as cdc_mod
 
 
-@pytest.fixture
-def round_trips(monkeypatch):
-    """Counts py4j commands sent by this Python process."""
-    from py4j.clientserver import ClientServerConnection
-
-    count = [0]
-    send = ClientServerConnection.send_command
-
-    def counting(self, command):
-        count[0] += 1
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    return count
-
-
 def test_warm_mor_commit_round_trip_budget(spark, tmp_path, round_trips):
     """A warmed MoR run() of one 5k-event batch makes at most 500 py4j
     round trips (rebuilding the staging expressions per batch made over
@@ -51,12 +35,11 @@ def test_warm_mor_commit_round_trip_budget(spark, tmp_path, round_trips):
         events.filter(F.col("batch_id") == int(bid)).write.mode(
             "append").partitionBy("batch_id").parquet(binlog)
         binlog_df = spark.read.parquet(binlog)
-        before = round_trips[0]
-        res = pipe.run(binlog_df)
-        used = round_trips[0] - before
+        with round_trips() as used:
+            res = pipe.run(binlog_df)
         assert len(res["applied"]) == 1 and not res["quarantined"]
     assert res["applied"][0]["metrics"]["rows_appended"] == 5000
-    assert used <= 500, used
+    assert used[0] <= 500, used[0]
 
 
 def _batch(spark, seq0, n=6, stars=None):
