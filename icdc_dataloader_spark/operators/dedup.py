@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 def lww_order_key(seq_col: str = "seq", *tiebreakers: str) -> Column:
     """Total order for LWW: (seq, *tiebreakers) — SURVEY.md §7.4.  The
     engine's only definition of it: dedup, resolve, compaction, the change
-    feed and the COW merge all order by this key (the pandas feed fold
-    mirrors it).
+    feed and the COW merge all order by this key (the streaming feed
+    source's Arrow fold sorts by the same columns, NULL first).
 
     Ties on ``seq`` (duplicate replays / equal-seq events) are broken
     deterministically by the tiebreaker columns (engine default:

@@ -7,9 +7,10 @@ only), so the table layer the north rule requires is implemented natively:
   ``_log/v{N:012d}.json`` snapshot manifests, committed by atomic
   ``os.rename`` (single-writer; a real deployment swaps in an Iceberg
   catalog — the API mirrors its semantics on purpose).
-- a snapshot lists data files with per-file stats (rows, bucket, key
-  min/max) -> file-level pruning for MERGE, the Spark analogue of the
-  reference's id-field indexes (create_index.py:60-95).  File entries live
+- a snapshot lists data files with per-file stats (rows, bucket, ``_seq``
+  min/max, which give a delta's lineage without a Spark job); MERGE
+  prunes by bucket, the Spark analogue of the reference's id-field
+  indexes (create_index.py:60-95).  File entries live
   in immutable per-bucket MANIFEST files (``_log/manifests/``); a snapshot
   holds only the manifest paths per bucket, so a commit writes one small
   manifest for its additions and re-references untouched buckets' lists
@@ -425,22 +426,18 @@ class LakeTable:
         """Write ``df`` (must contain ``_bucket``) as this version's data files.
 
         Files are partitioned by bucket (dir ``_pb={b}``) while keeping
-        ``_bucket`` as a physical column; returns manifest entries with
-        per-file stats (key columns plus _seq/_op) from the Parquet footers —
-        lineage and NEW-op detection come from footers, not extra Spark jobs.
+        ``_bucket`` as a physical column; returns manifest entries with the
+        file's ``_seq`` min/max from the Parquet footers — delta lineage
+        comes from footers, not extra Spark jobs.
         """
-        from .. import timers
-
         rel_dir = f"data/{dirname or f'v{version}'}"
         out_dir = os.path.join(self.root, rel_dir)
-        key_cols = list(self.key_cols()) + ["_seq", "_op"]
-        with timers.phase("write.job"):
-            (
-                df.withColumn("_pb", F.col("_bucket"))
-                .write.mode("overwrite")
-                .partitionBy("_pb")
-                .parquet(out_dir)
-            )
+        (
+            df.withColumn("_pb", F.col("_bucket"))
+            .write.mode("overwrite")
+            .partitionBy("_pb")
+            .parquet(out_dir)
+        )
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
@@ -461,34 +458,21 @@ class LakeTable:
             md = pq.ParquetFile(full).metadata
             stats = {}
             try:
-                # row-group column indexes address LEAF columns (maps /
-                # structs flatten to several leaves) — resolve names via
-                # path_in_schema, NOT the top-level arrow field index
-                leaf_idx = {}
-                if md.num_row_groups:
-                    rg0 = md.row_group(0)
-                    leaf_idx = {
-                        rg0.column(j).path_in_schema: j
-                        for j in range(rg0.num_columns)
-                    }
-                for kc in key_cols:
-                    ci = leaf_idx.get(kc)
-                    if ci is None:
-                        continue
-                    mins, maxs = [], []
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(ci).statistics
-                        if st and st.has_min_max:
-                            mins.append(st.min)
-                            maxs.append(st.max)
-                    if mins:
-                        stats[kc] = {
-                            "min": _json_safe(min(mins)),
-                            "max": _json_safe(max(maxs)),
-                        }
+                # statistics are per LEAF column (a map or struct column
+                # spans several leaves), so find _seq by its leaf path
+                leaves = [md.schema.column(j).path
+                          for j in range(md.num_columns)]
+                sts = [
+                    md.row_group(i).column(leaves.index("_seq")).statistics
+                    for i in range(md.num_row_groups)
+                ] if "_seq" in leaves else []
+                sts = [st for st in sts if st is not None and st.has_min_max]
+                if sts:
+                    stats["_seq"] = {"min": min(st.min for st in sts),
+                                     "max": max(st.max for st in sts)}
             except Exception:
-                # the file is still committed; without stats it is never
-                # pruned and contributes no lineage
+                # the file is still committed; without stats it
+                # contributes no lineage
                 log.warning(
                     "footer stats unreadable for %s; committing it without "
                     "stats", full, exc_info=True,
@@ -506,26 +490,25 @@ class LakeTable:
         # driver-side commit cost is ~#files/32, not #files (the round-1
         # serial walk was the Amdahl term blocking scaling efficiency; a
         # real deployment would take these stats from the write committer)
-        with timers.phase("write.footers"):
-            if len(targets) > FOOTER_JOB_THRESHOLD:
-                # a 10^10-event commit can write thousands of files; past
-                # this point the footer reads themselves become a job —
-                # executors each read a slice of footers (pyarrow is on
-                # every worker) and ship back only the manifest dicts.
-                # Below it, a driver thread pool is faster than a job
-                # round-trip (measured: 32 files ≈ 0.03s pooled).
-                sc = df.sparkSession.sparkContext
-                n_slices = max(2, min(64, len(targets) // 64))
-                entries = (
-                    sc.parallelize(targets, n_slices)
-                    .map(footer_entry)
-                    .collect()
-                )
-            elif len(targets) > 4:
-                with ThreadPoolExecutor(max_workers=32) as pool:
-                    entries = list(pool.map(footer_entry, targets))
-            else:
-                entries = [footer_entry(t) for t in targets]
+        if len(targets) > FOOTER_JOB_THRESHOLD:
+            # a 10^10-event commit can write thousands of files; past
+            # this point the footer reads themselves become a job —
+            # executors each read a slice of footers (pyarrow is on
+            # every worker) and ship back only the manifest dicts.
+            # Below it, a driver thread pool is faster than a job
+            # round-trip (measured: 32 files ≈ 0.03s pooled).
+            sc = df.sparkSession.sparkContext
+            n_slices = max(2, min(64, len(targets) // 64))
+            entries = (
+                sc.parallelize(targets, n_slices)
+                .map(footer_entry)
+                .collect()
+            )
+        elif len(targets) > 4:
+            with ThreadPoolExecutor(max_workers=32) as pool:
+                entries = list(pool.map(footer_entry, targets))
+        else:
+            entries = [footer_entry(t) for t in targets]
         return entries
 
     def commit(
@@ -538,22 +521,6 @@ class LakeTable:
         schema: T.StructType | None = None,
     ) -> int:
         """Commit a new snapshot. Idempotent per batch_id."""
-        from .. import timers
-
-        with timers.phase("commit.snapshot"):
-            return self._commit_inner(
-                new_files, carried_files, operation, batch_id, metrics, schema
-            )
-
-    def _commit_inner(
-        self,
-        new_files: list[dict],
-        carried_files: list[dict],
-        operation: str,
-        batch_id=None,
-        metrics: dict | None = None,
-        schema: T.StructType | None = None,
-    ) -> int:
         prev = self._raw_snapshot()
         committed = BatchIdSet.from_json(prev["committed_batch_ids"])
         if batch_id is not None and str(batch_id) in committed:
@@ -737,15 +704,6 @@ class LakeTable:
                 if rel not in live_manifests:
                     os.unlink(os.path.join(self.manifest_dir, fn))
                     self._manifest_cache.pop(rel, None)
-
-
-def _json_safe(v):
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8", "replace")
-        except Exception:
-            return repr(v)
-    return v
 
 
 def _quote(name: str) -> str:

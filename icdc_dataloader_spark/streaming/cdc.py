@@ -339,7 +339,6 @@ class CDCPipeline:
         if self.error_dir:
             merge_out = os.path.join(self.error_dir, f"batch={bid}-merge")
             merge_err_sink = lambda df: df.write.mode("overwrite").parquet(merge_out)
-        from .. import timers
 
         if self.strategy == "mor":
             # the write is the only action (one job for a one-split batch,
@@ -356,17 +355,16 @@ class CDCPipeline:
             lineage = res.get("lineage") or {}
             self._batches_since_compact += 1
             if self._batches_since_compact >= self.compact_every:
-                with timers.phase("compact"):
-                    # bucket-targeted: only delta-bearing buckets rewrite;
-                    # a bucket no batch touched costs nothing (at 10^10
-                    # events a full-table rewrite per cadence is the
-                    # O(table) term MoR exists to avoid)
-                    compact(
-                        self.spark,
-                        self.lake,
-                        drop_tombstones_below_seq=self._gc_watermark(),
-                        min_delta_files=1,
-                    )
+                # bucket-targeted: only delta-bearing buckets rewrite;
+                # a bucket no batch touched costs nothing (at 10^10
+                # events a full-table rewrite per cadence is the
+                # O(table) term MoR exists to avoid)
+                compact(
+                    self.spark,
+                    self.lake,
+                    drop_tombstones_below_seq=self._gc_watermark(),
+                    min_delta_files=1,
+                )
                 self._batches_since_compact = 0
         else:
             res = merge_into(
@@ -396,12 +394,11 @@ class CDCPipeline:
         metrics = dict(res["metrics"])
         metrics["rows_quarantined"] = n_errors
         min_bad = obs.get.get("min_bad_seq") if n_errors else None
-        with timers.phase("ledger.record"):
-            self.ledger.record(
-                bid, res["version"], metrics, lineage,
-                src_partitions=src_partitions,
-                quarantined_min=min_bad,
-            )
+        self.ledger.record(
+            bid, res["version"], metrics, lineage,
+            src_partitions=src_partitions,
+            quarantined_min=min_bad,
+        )
         return {
             "batch_id": bid,
             "noop": False,
@@ -624,13 +621,10 @@ class CDCPipeline:
             if self.ledger.is_quarantined(bid):
                 quarantined.append(str(bid))
                 continue
-            from .. import timers
-
             batch = events.filter(F.col(batch_col) == bid).drop(batch_col)
             while True:
                 try:
-                    with timers.phase("batch.total"):
-                        applied.append(self.apply_batch(batch, bid))
+                    applied.append(self.apply_batch(batch, bid))
                     self._pending_mins.pop(str(bid), None)
                     break
                 except Exception as e:  # noqa: BLE001 — parked, not hidden

@@ -16,11 +16,13 @@ incremental-read analogue).  This module lets a consumer TAIL the feed:
    composes with Structured Streaming checkpoints/sinks.  Offsets are
    lake VERSIONS; each micro-batch's input partitions are the CHANGED
    BUCKETS of (start, end] (driver-side manifest diff — untouched buckets
-   are never opened), and each partition resolves its bucket's old/new
-   winners and diffs them with pandas/Arrow inside the worker.  Keys hash
-   to exactly one bucket, so the per-bucket diff is complete and the
-   union over partitions equals ``changes_between`` row-for-row (pinned
-   by tests/test_change_feed_stream.py).
+   are never opened), and each partition takes its bucket's diff in
+   ``changes_between``'s one-pass form, in Arrow inside the worker: each
+   file read once, both snapshots' winners from one grouping, no join.
+   Keys hash to exactly one bucket, so the per-bucket diff is complete
+   and the union over partitions equals ``changes_between`` row-for-row
+   (pinned by tests/test_change_feed_stream.py and the LWW property
+   test).
 
 Reference analogue: consumers of the loader's graph reading what a load
 changed (the visit/relationship audit stats the loader prints,
@@ -41,10 +43,11 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..plans.lake import LakeTable
 from ..plans.merge import (
-    INTERNAL_COLS, OP_DELETE, changed_buckets, changes_between,
+    INTERNAL_COLS, OP_DELETE, _file_diff, changes_between,
 )
 
 
@@ -110,94 +113,78 @@ class ChangeFeedConsumer:
 
 @dataclass
 class _BucketDiffPartition(InputPartition):
-    """One changed bucket's diff task (picklable; carries the file lists
+    """One changed bucket's diff task (picklable; carries the file list
     so workers never read manifests)."""
 
     bucket: int
-    old_files: list = field(default_factory=list)  # [(abs_path, schema_json)]
-    new_files: list = field(default_factory=list)
+    files: list = field(default_factory=list)  # [(abs_path, in_old, in_new)]
+    schema: object = None  # pa.Schema: every column read, at v_to's types
     key_cols: list = field(default_factory=list)
     tiebreakers: list = field(default_factory=list)
     payload_cols: list = field(default_factory=list)
 
 
-def _to_pandas(table):
-    """Arrow -> pandas with integer columns as nullable ``Int64`` (plain
-    ``to_pandas`` makes an int column holding a NULL float64, inexact from
-    2^53 on)."""
-    import pandas as pd
+def _row_groups(files: list, schema, skip_old: set):
+    """Each file's rows, one row group at a time, aligned to ``schema``
+    (a column missing from an older file is NULL, a widened one cast, as
+    ``lake._align`` does) and flagged ``_in_old``/``_in_new``.  Files only
+    in ``v_from`` skip the ``skip_old`` columns (NULL)."""
     import pyarrow as pa
-
-    return table.to_pandas(
-        types_mapper=lambda t: pd.Int64Dtype() if pa.types.is_integer(t) else None
-    )
-
-
-def _load_aligned(files: list, cols: list[str]):
-    """Concat the parquet files' ``cols`` into one pandas frame, filling
-    columns absent from a file's schema with nulls (schema evolution)."""
-    import pandas as pd
     import pyarrow.parquet as pq
 
-    frames = []
-    for path, schema_json in files:
-        have = {f["name"] for f in json.loads(schema_json)["fields"]}
-        want = [c for c in cols if c in have]
-        pdf = _to_pandas(pq.read_table(path, columns=want))
-        for c in cols:
-            if c not in pdf.columns:
-                pdf[c] = None
-        frames.append(pdf[cols])
-    if not frames:
-        return pd.DataFrame({c: [] for c in cols})
-    return pd.concat(frames, ignore_index=True)
-
-
-def _winners_chunked(files: list, cols: list[str], key_cols: list[str],
-                     tiebreakers: list[str]):
-    """Per-key LWW winners over the files' rows with BOUNDED memory: fold
-    one row group at a time into a running winner frame instead of
-    concatenating every file into pandas first (round-5 verdict: a hot
-    bucket's full state landed in one Python worker).  Peak memory is
-    O(live keys in bucket + one row group), not O(all rows incl.
-    superseded).  The LWW order key is total (seq + tiebreakers), so the
-    pairwise fold equals the global reduction; exact-duplicate ties keep
-    the later chunk's row, matching the previous whole-frame stable sort
-    (keep='last' over running-then-chunk concat order)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    running = None
-    for path, schema_json in files:
-        have = {f["name"] for f in json.loads(schema_json)["fields"]}
-        want = [c for c in cols if c in have]
+    for path, in_old, in_new in files:
         pf = pq.ParquetFile(path)
-        for rg in range(pf.metadata.num_row_groups):
-            pdf = _to_pandas(pf.read_row_group(rg, columns=want))
-            for c in cols:
-                if c not in pdf.columns:
-                    pdf[c] = None
-            pdf = pdf[cols]
-            merged = (pdf if running is None
-                      else pd.concat([running, pdf], ignore_index=True))
-            running = _winners(merged, key_cols, tiebreakers)
-    if running is None:
-        return pd.DataFrame({c: [] for c in cols})
-    return running
+        have = set(pf.schema_arrow.names)
+        read = [f.name for f in schema
+                if f.name in have and (in_new or f.name not in skip_old)]
+        for i in range(pf.num_row_groups):
+            rg = pf.read_row_group(i, columns=read)
+            n = rg.num_rows
+            yield pa.table(
+                [rg[f.name].cast(f.type) if f.name in read
+                 else pa.nulls(n, f.type) for f in schema]
+                + [pa.repeat(in_old, n), pa.repeat(in_new, n)],
+                names=[*schema.names, "_in_old", "_in_new"],
+            )
 
 
-def _winners(pdf, key_cols: list[str], tiebreakers: list[str]):
-    """Per-key LWW winner — the pandas mirror of
-    :func:`operators.dedup.lww_order_key`: a stable sort on
-    ``(_seq, *tiebreakers)`` by each column's own type with NULL first
-    (Spark's struct ordering puts NULL lowest), then
-    drop_duplicates(keep='last').  NaN key components group together
-    (pandas treats NaN as equal in duplicated/merge), matching the JVM
-    kernel's window and grouping."""
-    pdf = pdf.sort_values(
-        ["_seq", *tiebreakers], kind="mergesort", na_position="first"
-    )
-    return pdf.drop_duplicates(subset=key_cols, keep="last")
+def _lww_fold(chunks, key_cols: list[str], tiebreakers: list[str]):
+    """Both snapshots' per-key LWW winners over ``chunks``, folded one
+    chunk at a time: ``(rows, won)``, where ``rows`` is sorted by
+    :func:`operators.dedup.lww_order_key`'s order and ``won`` holds per
+    key the row number in ``rows`` of the old (``_o_max``) and new
+    (``_n_max``) winner, NULL when the key has no row in that snapshot.
+
+    Each step is a stable sort on ``(_seq, *tiebreakers)`` with NULL
+    first (Spark's struct order), then one grouping whose two aggregates
+    are the max row number masked by each flag.  Only winning rows carry
+    into the next step, so memory is O(live keys + one chunk); the order
+    is total, so folding equals one reduction over every row (an exact
+    tie keeps the later chunk's row).  NULL key components group
+    together, as in the JVM kernel.  ``(None, None)`` for no chunks."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = won = None
+    for chunk in chunks:
+        if won is not None:
+            keep = np.zeros(rows.num_rows, dtype=bool)
+            for c in ("_o_max", "_n_max"):
+                keep[pc.drop_null(won[c]).to_numpy()] = True
+            chunk = pa.concat_tables([rows.filter(keep), chunk])
+        rows = chunk.take(pc.sort_indices(
+            chunk, [(c, "ascending") for c in ("_seq", *tiebreakers)],
+            null_placement="at_start",
+        ))
+        rn = pa.array(np.arange(rows.num_rows, dtype=np.int64))
+        null = pa.scalar(None, pa.int64())
+        won = pa.table({
+            **{k: rows[k] for k in key_cols},
+            "_o": pc.if_else(rows["_in_old"], rn, null),
+            "_n": pc.if_else(rows["_in_new"], rn, null),
+        }).group_by(key_cols).aggregate([("_o", "max"), ("_n", "max")])
+    return rows, won
 
 
 class LakeChangeFeedDataSource(DataSource):
@@ -267,6 +254,8 @@ class LakeChangeFeedReader(DataSourceStreamReader):
         return {"version": self.lake.latest_version() or 0}
 
     def partitions(self, start: dict, end: dict):
+        import pyarrow as pa
+
         v_from, v_to = start["version"], end["version"]
         if v_to <= v_from:
             return []
@@ -283,28 +272,35 @@ class LakeChangeFeedReader(DataSourceStreamReader):
         tiebreakers = lake.tiebreakers()
         # payload columns come from the schema declared at stream start,
         # NOT lake.schema(v_to): mid-stream evolution must not change the
-        # emitted row arity (see __init__)
+        # emitted row arity (see __init__).  Rows are read at v_to's types
+        # (a declared column v_to lacks keeps its declared type) and cast
+        # to the declared ones on emit.
         payload_cols = [
             f.name for f in self.declared_schema.fields
             if f.name not in key_cols and f.name != "change_type"
         ]
-        old_by_bucket: dict[int, list] = {}
-        new_by_bucket: dict[int, list] = {}
-        for snap_v, acc in ((v_from, old_by_bucket), (v_to, new_by_bucket)):
-            for f in lake.snapshot(snap_v)["files"]:
-                acc.setdefault(f["bucket"], []).append(
-                    (os.path.join(lake.root, f["path"]), f["schema"])
+        types = {f.name: f for f in to_arrow_schema(self.declared_schema)}
+        types.update({f.name: f for f in to_arrow_schema(lake.schema(v_to))})
+        schema = pa.schema([types[c] for c in dict.fromkeys(
+            [*key_cols, "_seq", "_op", *tiebreakers, *payload_cols]
+        )])
+        old, new, changed = _file_diff(lake, v_from, v_to)
+        files: dict[int, list] = {b: [] for b in sorted(changed)}
+        for path, f in {**old, **new}.items():
+            if f["bucket"] in files:
+                files[f["bucket"]].append(
+                    (os.path.join(lake.root, path), path in old, path in new)
                 )
         return [
             _BucketDiffPartition(
                 bucket=b,
-                old_files=old_by_bucket.get(b, []),
-                new_files=new_by_bucket.get(b, []),
+                files=fs,
+                schema=schema,
                 key_cols=key_cols,
                 tiebreakers=tiebreakers,
                 payload_cols=payload_cols,
             )
-            for b in changed_buckets(lake, v_from, v_to)
+            for b, fs in files.items()
         ]
 
     # rows per emitted Arrow batch: large enough to amortize the
@@ -312,58 +308,47 @@ class LakeChangeFeedReader(DataSourceStreamReader):
     ARROW_BATCH_ROWS = 32_768
 
     def read(self, partition: _BucketDiffPartition):
-        import pandas as pd
+        """The bucket's diff in ``changes_between``'s one-pass form: each
+        file read once, both winners per key from one grouping (no join),
+        classified as the JVM kernel does, emitted as Arrow batches."""
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         p = partition
-        meta_cols = list(
-            dict.fromkeys(list(p.key_cols) + ["_seq", "_op"] + p.tiebreakers)
+        rows, won = _lww_fold(
+            _row_groups(p.files, p.schema,
+                        set(p.payload_cols) - set(p.tiebreakers)),
+            p.key_cols, p.tiebreakers,
         )
-        # winners are folded one row group at a time (bounded memory; see
-        # _winners_chunked) — the round-5 shape materialized the bucket's
-        # ENTIRE old+new state in one pandas frame before reducing
-        old = _winners_chunked(
-            p.old_files, meta_cols, p.key_cols, p.tiebreakers
-        )
-        old = old[old["_op"] != OP_DELETE][p.key_cols + ["_seq"]].rename(
-            columns={"_seq": "_old_seq"}
-        )
-        new_cols = list(
-            dict.fromkeys(meta_cols + p.payload_cols)
-        )
-        new = _winners_chunked(
-            p.new_files, new_cols, p.key_cols, p.tiebreakers
-        )
-        new = new[new["_op"] != OP_DELETE][
-            p.key_cols + ["_seq"] + p.payload_cols
-        ].rename(columns={"_seq": "_new_seq"})
+        if rows is None:
+            return
+        old, new = won["_o_max"], won["_n_max"]
 
-        j = new.merge(old, on=p.key_cols, how="outer")  # NaN keys match
-        ins = j["_old_seq"].isna() & j["_new_seq"].notna()
-        dele = j["_new_seq"].isna() & j["_old_seq"].notna()
-        upd = (j["_new_seq"] != j["_old_seq"]).fillna(False) & ~(ins | dele)
-        j["change_type"] = None
-        j.loc[ins, "change_type"] = "insert"
-        j.loc[dele, "change_type"] = "delete"
-        j.loc[upd, "change_type"] = "update"
-        out = j[j["change_type"].notna()][
-            p.key_cols + ["change_type"] + p.payload_cols
-        ]
-        # integer columns stay exact: they load as nullable Int64
-        out = out.astype(object).where(pd.notnull(out), None)
-        # emit pyarrow RecordBatches, not per-row Python tuples: the
-        # datasource API ships Arrow batches to the JVM wholesale, while
-        # tuple yield pays per-row pickling + per-row conversion (round-5
-        # verdict item; measured in bench/feed_stream_bench.py).  The batch
-        # schema must match the declared source schema exactly.
-        from pyspark.sql.pandas.types import to_arrow_schema
+        def live(idx):
+            return pc.fill_null(
+                pc.not_equal(rows["_op"].take(idx), OP_DELETE), False)
 
-        arrow_schema = to_arrow_schema(self.declared_schema)
-        for lo in range(0, len(out), self.ARROW_BATCH_ROWS):
-            chunk = out.iloc[lo:lo + self.ARROW_BATCH_ROWS]
-            yield pa.RecordBatch.from_pandas(
-                chunk, schema=arrow_schema, preserve_index=False
-            )
+        old_live, new_live = live(old), live(new)
+        moved = pc.fill_null(
+            pc.not_equal(rows["_seq"].take(new), rows["_seq"].take(old)),
+            False)
+        change = pc.case_when(
+            pc.make_struct(pc.and_not(new_live, old_live),
+                           pc.and_not(old_live, new_live),
+                           pc.and_(new_live, moved)),
+            "insert", "delete", "update",
+        )
+        out = pa.table({
+            **{k: won[k] for k in p.key_cols},
+            "change_type": change,
+            **{c: pc.if_else(new_live, rows[c].take(new),
+                             pa.scalar(None, rows[c].type))
+               for c in p.payload_cols},
+        }).filter(pc.is_valid(change))
+        # the datasource API ships Arrow batches to the JVM wholesale; the
+        # batch schema must match the declared source schema exactly
+        out = out.cast(to_arrow_schema(self.declared_schema))
+        yield from out.combine_chunks().to_batches(self.ARROW_BATCH_ROWS)
 
     def commit(self, end: dict) -> None:
         pass  # Structured Streaming's checkpoint owns the offset

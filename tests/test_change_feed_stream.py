@@ -118,8 +118,9 @@ def test_readstream_source_matches_batch_call(spark, tmp_path):
 
 
 def test_readstream_source_null_keys_and_bucket_pruning(spark, tmp_path):
-    """NULL-keyed rows survive the pandas per-bucket diff (NaN keys match
-    in merge), and only changed buckets become input partitions.  Drives
+    """NULL-keyed rows survive the per-bucket Arrow diff (NULL key
+    components group together), and only changed buckets become input
+    partitions.  Drives
     the lake directly (the model requires path, so the validated pipeline
     would quarantine NULL-path rows)."""
     from icdc_dataloader_spark.plans.merge import append_delta

@@ -6,7 +6,8 @@ NULL and ``''`` string tiebreakers and a LongType tiebreaker (9 vs 10:
 numeric, not text order; 2^53 vs 2^53+1 next to a NULL: exact, not
 float64).  The winner must be the same under ``lww_dedup``
 (agg, salted), ``read_state`` after a MoR append and after
-``compact``, the COW ``merge_into`` and the change feed's pandas fold; in
+``compact``, the COW ``merge_into`` and the streaming feed's Arrow fold,
+and the streaming feed source must emit ``changes_between``'s rows; in
 the repos table's domain it must also match the independent oracle.
 """
 
@@ -15,6 +16,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pyarrow as pa
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -22,13 +24,19 @@ from icdc_dataloader_spark import oracle
 from icdc_dataloader_spark.operators.dedup import lww_dedup
 from icdc_dataloader_spark.plans.lake import LakeTable
 from icdc_dataloader_spark.plans.merge import (
-    append_delta, compact, merge_into, read_state, resolve, table_schema,
+    append_delta, changes_between, compact, merge_into, read_state, resolve,
+    table_schema,
 )
 from icdc_dataloader_spark.repos import TIEBREAKERS, create_repos_table
-from icdc_dataloader_spark.streaming.feed import _winners_chunked
+from icdc_dataloader_spark.streaming.feed import (
+    LakeChangeFeedReader, _lww_fold, _row_groups,
+)
 
 TB = ["tb_s", "tb_l"]
 SCHEMA = "k string, v string, tb_s string, tb_l long, _seq long, _op string"
+ARROW = pa.schema([("k", pa.string()), ("v", pa.string()),
+                   ("tb_s", pa.string()), ("tb_l", pa.int64()),
+                   ("_seq", pa.int64()), ("_op", pa.string())])
 PROPS = settings(max_examples=8, deadline=None, database=None)
 
 events = st.lists(
@@ -86,6 +94,18 @@ def _v_by_key(rows):
     return {r["k"]: r["v"] for r in rows}
 
 
+def _stream_rows(lake, v_from, v_to):
+    """The streaming source's rows for (v_from, v_to], read through its
+    own partitions."""
+    reader = LakeChangeFeedReader({"path": lake.root})
+    parts = reader.partitions({"version": v_from}, {"version": v_to})
+    return sorted(
+        (tuple(row.values()) for p in parts for b in reader.read(p)
+         for row in b.to_pylist()),
+        key=repr,
+    )
+
+
 @PROPS
 @given(raw=events)
 @example(raw=[
@@ -113,29 +133,44 @@ def test_every_lww_path_picks_the_same_winner(spark, raw):
 
     with tempfile.TemporaryDirectory() as root:
         mor, cow = _lake(root, "mor"), _lake(root, "cow")
+        versions = [mor.latest_version()]
         for i, b in enumerate(batches):
             batch = spark.createDataFrame(b, SCHEMA)
             append_delta(spark, mor, batch, batch_id=f"b{i}", pre_dedup=False)
             merge_into(spark, cow, batch, batch_id=f"b{i}")
+            versions.append(mor.latest_version())
 
         files = [
-            (os.path.join(mor.root, f["path"]), f["schema"])
+            (os.path.join(mor.root, f["path"]), False, True)
             for f in mor.snapshot()["files"]
         ]
-        cols = ["k", "v", "tb_s", "tb_l", "_seq", "_op"]
-        feed = _winners_chunked(files, cols, ["k"], TB)
+        rows, won = _lww_fold(_row_groups(files, ARROW, set()), ["k"], TB)
         got_feed = {
-            (None if r["k"] is None or r["k"] != r["k"] else r["k"]): r["v"]
-            for r in feed.to_dict("records")
+            r["k"]: r["v"] for r in rows.take(won["_n_max"]).to_pylist()
         }
-        assert got_feed == want_all, "pandas fold"
+        assert got_feed == want_all, "arrow fold"
 
         assert _v_by_key(read_state(spark, mor).collect()) == want_live, "mor"
         compact(spark, mor)
+        versions.append(mor.latest_version())
         assert _v_by_key(read_state(spark, mor).collect()) == want_live, (
             "compact"
         )
         assert _v_by_key(read_state(spark, cow).collect()) == want_live, "cow"
+
+        # the streaming source's diff == changes_between's: from empty,
+        # across a delta kept in both snapshots, and across compaction
+        # (files only in v_from)
+        for v_from, v_to in {(0, versions[-2]), (versions[1], versions[-2]),
+                             (versions[1], versions[-1])}:
+            if v_from == v_to:
+                continue
+            want = sorted(
+                (tuple(r) for r in
+                 changes_between(spark, mor, v_from, v_to).collect()),
+                key=repr,
+            )
+            assert _stream_rows(mor, v_from, v_to) == want, (v_from, v_to)
 
 
 repos_events = st.lists(

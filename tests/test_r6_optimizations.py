@@ -10,8 +10,8 @@ pin the arguments' edge cases directly:
 2. resolve has one shape — the window-watermark kernel compaction
    uses — and it must keep the delete->recreate created-lineage reset
    and NULL-keyed rows, before and after compaction.
-3. the streaming feed's chunked winner fold must equal the whole-frame
-   reduction across row-group boundaries, and read() must emit multiple
+3. the streaming feed's row-group Arrow fold must equal a one-chunk
+   fold across row-group boundaries, and read() must emit multiple
    Arrow batches when the diff exceeds the batch size.
 """
 
@@ -138,33 +138,28 @@ def test_compact_single_file_per_bucket(spark, tmp_path):
     assert all(f["role"] == "base" for f in files)
 
 
-def test_winners_chunked_matches_whole_frame(tmp_path):
-    """Row-group-bounded fold == whole-frame reduction, across files AND
+def test_arrow_fold_bounded_matches_one_chunk(tmp_path):
+    """Row-group-bounded fold == one-chunk fold, across files AND
     row-group boundaries (including a winner in an early chunk that must
-    survive later chunks)."""
-    import pandas as pd
+    survive later chunks), for both snapshots' winners."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from icdc_dataloader_spark.streaming.feed import (
-        _load_aligned, _winners, _winners_chunked,
-    )
+    from icdc_dataloader_spark.streaming.feed import _lww_fold, _row_groups
 
-    schema_json = (
-        '{"type":"struct","fields":['
-        '{"name":"repo","type":"string","nullable":true,"metadata":{}},'
-        '{"name":"path","type":"string","nullable":true,"metadata":{}},'
-        '{"name":"commit","type":"string","nullable":true,"metadata":{}},'
-        '{"name":"_seq","type":"long","nullable":true,"metadata":{}},'
-        '{"name":"_op","type":"string","nullable":true,"metadata":{}}]}'
-    )
-    cols = ["repo", "path", "commit", "_seq", "_op"]
+    schema = pa.schema([
+        ("repo", pa.string()), ("path", pa.string()), ("commit", pa.string()),
+        ("_seq", pa.int64()), ("_op", pa.string()),
+    ])
 
-    def write(path, rows, row_group_size):
-        pdf = pd.DataFrame(rows, columns=cols)
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       path, row_group_size=row_group_size)
-        return (str(path), schema_json)
+    def write(path, rows, row_group_size, in_old):
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema),
+            path, row_group_size=row_group_size,
+        )
+        return (str(path), in_old, True)
 
     f1 = write(
         tmp_path / "a.parquet",
@@ -177,6 +172,7 @@ def test_winners_chunked_matches_whole_frame(tmp_path):
             ("r3", "p", "c4", 4, "delete"),
         ],
         row_group_size=2,  # forces 3 row groups -> 3 fold steps
+        in_old=True,
     )
     f2 = write(
         tmp_path / "b.parquet",
@@ -185,17 +181,33 @@ def test_winners_chunked_matches_whole_frame(tmp_path):
             ("r3", "p", "c6", 6, "upsert"),
             ("r2", None, "c0", 0, "upsert"),
         ],
-        row_group_size=10,
+        # one row per group: an old winner the new one has displaced
+        # (r2's c2 after c8) must survive the later steps
+        row_group_size=1,
+        in_old=False,
     )
-    whole = _winners(_load_aligned([f1, f2], cols), ["repo", "path"],
-                     ["commit"])
-    chunked = _winners_chunked([f1, f2], cols, ["repo", "path"], ["commit"])
-    w = sorted(map(tuple, whole[cols].itertuples(index=False, name=None)),
-               key=str)
-    c = sorted(map(tuple, chunked[cols].itertuples(index=False, name=None)),
-               key=str)
-    assert w == c
-    assert ("r1", "p", "c9", 9, "upsert") in c  # early winner survived
+
+    def chunks():
+        return _row_groups([f1, f2], schema, set())
+
+    def winners(parts):
+        rows, won = _lww_fold(parts, ["repo", "path"], ["commit"])
+        rows = rows.select(schema.names)
+        return {
+            flag: sorted(
+                (tuple(r.values()) for r in
+                 rows.take(pc.drop_null(won[flag])).to_pylist()),
+                key=str,
+            )
+            for flag in ("_o_max", "_n_max")
+        }
+
+    assert len(list(chunks())) == 6
+    whole = winners([pa.concat_tables(chunks())])
+    chunked = winners(chunks())
+    assert whole == chunked
+    assert ("r1", "p", "c9", 9, "upsert") in chunked["_n_max"]  # survived
+    assert ("r1", "p", "c9", 9, "upsert") in chunked["_o_max"]
 
 
 def test_feed_read_emits_multiple_arrow_batches(spark, tmp_path):
